@@ -26,10 +26,12 @@ lacks natively.
 
 from __future__ import annotations
 
+from concurrent.futures import Future, ThreadPoolExecutor
 from pathlib import Path
 from typing import Iterator
 
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -71,12 +73,22 @@ def merge_upsert(
     is a no-op — the reference's idempotency contract (SURVEY.md §1.5)
     carried over. Snapshot swap is atomic with one backup generation
     retained (write_rotating).
+
+    The current snapshot is read with ``new_df``'s schema rather than
+    one inferred from its parquet footers, which saves the inference
+    job (a merge into an existing snapshot runs two jobs: the keep-last
+    shuffle and the write). Consequences: a column the batch has and
+    the snapshot lacks is added, and rows merged before it read NULL
+    there (additive evolution, as in Delta); a snapshot column the
+    batch lacks is dropped, as before; a column whose stored type the
+    batch type cannot read (string stored, long in the batch) fails the
+    write, and the current snapshot stays in place.
     """
     target = Path(base_dir) / name
     gen = F.lit(1)
     new_tagged = new_df.withColumn("_gen", gen)
     if target.exists():
-        current = spark.read.parquet(str(target)).select(*new_df.columns)
+        current = spark.read.schema(new_df.schema).parquet(str(target))
         merged = current.withColumn("_gen", F.lit(0)).unionByName(new_tagged)
     else:
         merged = new_tagged
@@ -106,6 +118,26 @@ def run_incremental_github(
     Fan-in note: issues/branches join the repos dim *of their batch*;
     with per-entity directories landing together (the reference's layout)
     that is the same repos snapshot the batch reference used.
+
+    Within a micro-batch the five merges run side by side, one thread
+    per table. A batch is a few dozen small Spark jobs, and most of its
+    wall time is driver-side planning and scheduling between them;
+    threads let one table's planning overlap another's jobs (py4j calls
+    and the JVM's work release the GIL). Each thread is made with
+    ``pyspark.inheritable_thread_target``, so its jobs keep the stream's
+    job group and local properties. The repos cleaner runs first, on the
+    stream's thread, because every table reads its output; every other
+    cleaner is built in its table's thread.
+
+    The dependency order is repos → {repos, owners, branches, issues}
+    and issues → users. The cleaned repos frame, and the issues frame in
+    its own thread, are cached and filled before any merge reads them:
+    merges that start together on an unfilled cache would each run a
+    job to fill it. Every merge is an idempotent keep-last upsert, so
+    running them concurrently keeps the replay contract: if one fails,
+    the others still finish, every snapshot is a whole generation, the
+    batch raises, and the rerun replays it. The cached frames are
+    released before the batch returns.
     """
     from incremental_github_data_pipeline_spark.pipelines import github as gh
 
@@ -113,26 +145,54 @@ def run_incremental_github(
     stream = stream_json_dir(spark, raw_dir / "repos_raw*.json", gh.REPOS_RAW_SCHEMA)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        repos = gh.clean_repos(batch_df).cache()
-        merge_upsert(spark, repos, out_dir, "repos_clean", ["repo_id"])
-        merge_upsert(
-            spark, gh.clean_owners(repos), out_dir, "owners_clean", ["owner_id"]
-        )
         branch_path = raw_dir / "branches_raw.json"
-        if branch_path.exists():
-            branches = gh.clean_branches(
-                gh.read_json_array(spark, branch_path, gh.BRANCHES_RAW_SCHEMA), repos
-            )
-            merge_upsert(spark, branches, out_dir, "branches_clean", ["branch_id"])
         issue_path = raw_dir / "issues_raw.json"
-        if issues_available and issue_path.exists():
-            issues = gh.clean_issues(
-                gh.read_json_array(spark, issue_path, gh.ISSUES_RAW_SCHEMA), repos
-            ).cache()
-            merge_upsert(spark, issues, out_dir, "issues_clean", ["issue_id"])
-            merge_upsert(
-                spark, gh.clean_users(issues), out_dir, "users_clean", ["user_id"]
-            )
+        with_branches = branch_path.exists()
+        with_issues = issues_available and issue_path.exists()
+        cached: list[DataFrame] = []
+
+        def cache(df: DataFrame) -> DataFrame:
+            """Cache ``df`` and fill the cache now: building a frame's RDD
+            runs the query stages of its adaptive plan, the cache's among
+            them, but not its final stage, so no job is spent on a result."""
+            cached.append(df.cache())
+            df.rdd  # noqa: B018 - read for its side effect
+            return df
+
+        def branches_frame() -> DataFrame:
+            raw = gh.read_json_array(spark, branch_path, gh.BRANCHES_RAW_SCHEMA)
+            return gh.clean_branches(raw, repos)
+
+        def issues_frame() -> DataFrame:
+            raw = gh.read_json_array(spark, issue_path, gh.ISSUES_RAW_SCHEMA)
+            return cache(gh.clean_issues(raw, repos))
+
+        futures: list[Future] = []
+        try:
+            repos = cache(gh.clean_repos(batch_df))
+            with ThreadPoolExecutor(2 + with_branches + 2 * with_issues) as pool:
+
+                def submit(fn) -> Future:
+                    futures.append(pool.submit(inheritable_thread_target(spark)(fn)))
+                    return futures[-1]
+
+                def table(name: str, key: str, build) -> None:
+                    submit(lambda: merge_upsert(spark, build(), out_dir, name, [key]))
+
+                table("repos_clean", "repo_id", lambda: repos)
+                table("owners_clean", "owner_id", lambda: gh.clean_owners(repos))
+                if with_branches:
+                    table("branches_clean", "branch_id", branches_frame)
+                if with_issues:
+                    # submitted before its two waiters, so it never waits for a thread
+                    issues = submit(issues_frame)
+                    table("issues_clean", "issue_id", issues.result)
+                    table("users_clean", "user_id", lambda: gh.clean_users(issues.result()))
+            for f in futures:
+                f.result()
+        finally:
+            for df in cached:
+                df.unpersist()
 
     (
         stream.writeStream.foreachBatch(process)
@@ -1367,10 +1427,14 @@ def run_incremental_to_warehouse(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         repos = gh.clean_repos(batch_df).cache()
-        warehouse.merge_upsert(gh.clean_owners(repos), "owners", ["owner_id"])
-        warehouse.merge_upsert(
-            gh.repos_for_warehouse(repos), "repos", ["repo_id"]
-        )
+        try:
+            # owners first: repos reference them by foreign key
+            warehouse.merge_upsert(gh.clean_owners(repos), "owners", ["owner_id"])
+            warehouse.merge_upsert(
+                gh.repos_for_warehouse(repos), "repos", ["repo_id"]
+            )
+        finally:
+            repos.unpersist()
 
     (
         stream.writeStream.foreachBatch(process)

@@ -211,6 +211,291 @@ def test_incremental_github_end_to_end(spark, tmp_path):
     assert (out / "repos_clean_backup").exists()
 
 
+# ---------------------------------------------------------------------------
+# run_incremental_github on raw batches written by the tests: all five
+# tables, keep-last updates, dropped rows, replay and a failing merge.
+# ---------------------------------------------------------------------------
+
+_GH_USERS = {"alice": 11, "bob": 12, "carol": 13}
+
+
+def _gh_repo(gid, name, stars):
+    return {
+        "id": gid, "name": name, "full_name": f"acme/{name}",
+        "owner": {"id": 1, "login": "acme"}, "visibility": "public",
+        "stargazers_count": stars, "created_at": "2024-01-01T00:00:00Z",
+    }
+
+
+def _gh_branch(repo, name, sha):
+    return {"name": name, "repo_name": repo, "protected": False, "commit": {"sha": sha}}
+
+
+def _gh_issue(gid, repo, number, author, state, comments, assignee=None):
+    def user(login):
+        return None if login is None else {"id": _GH_USERS[login], "login": login}
+
+    return {
+        "id": gid, "repo_name": repo, "number": number, "user": user(author),
+        "title": f"issue {number}", "state": state, "comments": comments,
+        "assignee": user(assignee),
+    }
+
+
+# Batch 2 updates repo alpha, adds a branch and an issue on it, moves a
+# branch head and closes an issue; carol authors that issue and alice,
+# an author since batch 1, is its assignee (bob is both from batch 1 on).
+# Every batch also carries a null-key row and an orphan row (repo
+# "ghost" is in no batch) per entity.
+GH_BATCH_1 = {
+    "repos": [
+        _gh_repo(101, "alpha", 5),
+        _gh_repo(102, "beta", 7),
+        _gh_repo(None, "nokey", 1),
+    ],
+    "branches": [
+        _gh_branch("alpha", "main", "a1"),
+        _gh_branch("beta", "main", "b1"),
+        _gh_branch("ghost", "main", "g1"),
+        _gh_branch("alpha", None, "n1"),
+    ],
+    "issues": [
+        _gh_issue(1001, "alpha", 1, "alice", "open", 0, assignee="bob"),
+        _gh_issue(1002, "beta", 1, "bob", "open", 0),
+        _gh_issue(1009, "ghost", 1, "carol", "open", 0),
+        _gh_issue(None, "alpha", 9, "carol", "open", 0),
+    ],
+}
+GH_BATCH_2 = {
+    "repos": [
+        _gh_repo(101, "alpha", 50),
+        _gh_repo(103, "gamma", 1),
+        _gh_repo(None, "nokey", 2),
+    ],
+    "branches": [
+        _gh_branch("alpha", "main", "a1x"),
+        _gh_branch("alpha", "dev", "a2"),
+        _gh_branch("ghost", "dev", "g2"),
+        _gh_branch("gamma", None, "n2"),
+    ],
+    "issues": [
+        _gh_issue(1001, "alpha", 1, "alice", "closed", 3, assignee="bob"),
+        _gh_issue(1003, "alpha", 2, "carol", "open", 1, assignee="alice"),
+        _gh_issue(1010, "ghost", 2, "carol", "open", 0),
+        _gh_issue(None, "gamma", 9, "carol", "open", 0),
+    ],
+}
+
+
+def _land_github(raw, n, batch):
+    raw.mkdir(exist_ok=True)
+    (raw / "branches_raw.json").write_text(json.dumps(batch["branches"]))
+    (raw / "issues_raw.json").write_text(json.dumps(batch["issues"]))
+    (raw / f"repos_raw_{n}.json").write_text(json.dumps(batch["repos"]))
+
+
+def _gh_expected():
+    """The keep-last state of every table after batch 1 and after batch 2,
+    as {key: tracked values}."""
+    import uuid
+
+    from incremental_github_data_pipeline_spark import keys
+
+    def uid(ns, name):
+        return str(uuid.uuid5(ns, name))
+
+    def repo(name):
+        return uid(keys.NAMESPACE_REPO, f"acme|{name}")
+
+    def user(login):
+        return uid(keys.NAMESPACE_USER, login)
+
+    def branch(r, b, sha):
+        return {uid(keys.NAMESPACE_BRANCH, f"{r}|{b}"): (sha, repo(r))}
+
+    def issue(r, n, gid, state, comments, author, assignee=None):
+        return {
+            uid(keys.NAMESPACE_ISSUE, f"{r}|{n}"): (
+                gid, state, comments, user(author),
+                user(assignee) if assignee else None, repo(r),
+            )
+        }
+
+    owners = {uid(keys.NAMESPACE_OWNER, "acme"): ("acme",)}
+    after1 = {
+        "repos_clean": {repo("alpha"): (101, 5), repo("beta"): (102, 7)},
+        "owners_clean": owners,
+        "branches_clean": {**branch("alpha", "main", "a1"), **branch("beta", "main", "b1")},
+        "issues_clean": {
+            **issue("alpha", 1, 1001, "open", 0, "alice", "bob"),
+            **issue("beta", 1, 1002, "open", 0, "bob"),
+        },
+        "users_clean": {user(u): (u,) for u in ("alice", "bob")},
+    }
+    after2 = {
+        "repos_clean": {**after1["repos_clean"], repo("alpha"): (101, 50), repo("gamma"): (103, 1)},
+        "owners_clean": owners,
+        "branches_clean": {
+            **after1["branches_clean"],
+            **branch("alpha", "main", "a1x"),
+            **branch("alpha", "dev", "a2"),
+        },
+        "issues_clean": {
+            **after1["issues_clean"],
+            **issue("alpha", 1, 1001, "closed", 3, "alice", "bob"),
+            **issue("alpha", 2, 1003, "open", 1, "carol", "alice"),
+        },
+        "users_clean": {user(u): (u,) for u in ("alice", "bob", "carol")},
+    }
+    return after1, after2
+
+
+_GH_TRACKED = {
+    "repos_clean": ("repo_id", "github_repo_id", "stargazers_count"),
+    "owners_clean": ("owner_id", "owner_login"),
+    "branches_clean": ("branch_id", "commit_sha", "repo_id"),
+    "issues_clean": (
+        "issue_id", "github_issue_id", "state", "comments",
+        "author_id", "assignee_id", "repo_id",
+    ),
+    "users_clean": ("user_id", "user_login"),
+}
+
+
+def _gh_state(spark, out, names=tuple(_GH_TRACKED)):
+    """Each snapshot as {key: tracked values}; keys must be unique."""
+    state = {}
+    for name in names:
+        rows = spark.read.parquet(str(out / name)).select(*_GH_TRACKED[name]).collect()
+        state[name] = {r[0]: tuple(r[1:]) for r in rows}
+        assert len(state[name]) == len(rows), f"{name}: duplicate keys"
+    return state
+
+
+def _gh_snapshots(spark, out):
+    """Every column of every snapshot but the ingest timestamp."""
+    return {
+        name: sorted(
+            spark.read.parquet(str(out / name)).drop("ingested_at").collect(), key=str
+        )
+        for name in _GH_TRACKED
+    }
+
+
+def _persistent_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_incremental_github_five_tables_keep_last_and_replay(spark, tmp_path):
+    """Two batches written here through all five tables: updates win,
+    null-key and orphan rows are dropped, users join authors and
+    assignees; the batches' cached frames are released; replaying
+    batch 2 under a fresh checkpoint changes nothing."""
+    raw, out = tmp_path / "raw", tmp_path / "out"
+    after1, after2 = _gh_expected()
+    persisted = _persistent_rdd_ids(spark)
+
+    _land_github(raw, 1, GH_BATCH_1)
+    run_incremental_github(spark, raw, out, tmp_path / "ckpt")
+    assert _gh_state(spark, out) == after1
+
+    _land_github(raw, 2, GH_BATCH_2)
+    run_incremental_github(spark, raw, out, tmp_path / "ckpt")
+    assert _gh_state(spark, out) == after2
+    assert _persistent_rdd_ids(spark) - persisted == set()
+
+    before = _gh_snapshots(spark, out)
+    _land_github(tmp_path / "replay", 2, GH_BATCH_2)
+    run_incremental_github(spark, tmp_path / "replay", out, tmp_path / "ckpt_replay")
+    assert _gh_snapshots(spark, out) == before
+
+
+def test_incremental_github_failed_merge_raises_and_rerun_converges(spark, tmp_path):
+    """One table's merge fails (its snapshot holds `comments` as a
+    string): the run raises, no worker thread outlives it, every
+    snapshot is a whole generation, and a rerun after the snapshot is
+    repaired replays the batch to the keep-last state."""
+    import threading
+
+    from pyspark.errors import StreamingQueryException
+
+    from incremental_github_data_pipeline_spark.sources.writers import write_rotating
+
+    raw, out, ckpt = tmp_path / "raw", tmp_path / "out", tmp_path / "ckpt"
+    after1, after2 = _gh_expected()
+    _land_github(raw, 1, GH_BATCH_1)
+    run_incremental_github(spark, raw, out, ckpt)
+    issues = spark.read.parquet(str(out / "issues_clean"))
+    write_rotating(issues.withColumn("comments", F.col("comments").cast("string")), out, "issues_clean")
+
+    _land_github(raw, 2, GH_BATCH_2)
+    threads = set(threading.enumerate())
+    with pytest.raises(StreamingQueryException):
+        run_incremental_github(spark, raw, out, ckpt)
+    assert [
+        t for t in threading.enumerate()
+        if t not in threads and t.name.startswith("ThreadPoolExecutor")
+    ] == []
+    others = [n for n in _GH_TRACKED if n != "issues_clean"]
+    for name, got in _gh_state(spark, out, others).items():
+        assert got in (after1[name], after2[name]), name
+        assert (out / name / "_SUCCESS").exists()
+    bad = spark.read.parquet(str(out / "issues_clean"))
+    assert dict(bad.dtypes)["comments"] == "string" and bad.count() == 2
+
+    write_rotating(bad.withColumn("comments", F.col("comments").cast("long")), out, "issues_clean")
+    run_incremental_github(spark, raw, out, ckpt)
+    assert _gh_state(spark, out) == after2
+
+
+def _jobs_in_group(spark, group, action):
+    """Spark jobs that ``action`` runs on this thread."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_merge_upsert_reads_snapshot_with_batch_schema(spark, tmp_path):
+    """The snapshot is read with the batch's schema, not inferred from
+    its footers: a merge into an existing snapshot runs the shuffle and
+    the write, and no schema-inference job."""
+    b1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, val string")
+    b2 = spark.createDataFrame([(2, "B2"), (3, "c")], "id long, val string")
+    merge_upsert(spark, b1, tmp_path, "t", ["id"])
+    jobs = _jobs_in_group(
+        spark, "merge-into-snapshot", lambda: merge_upsert(spark, b2, tmp_path, "t", ["id"])
+    )
+    assert jobs == 2
+
+
+def test_merge_upsert_type_conflict_raises_and_keeps_snapshot(spark, tmp_path):
+    from py4j.protocol import Py4JJavaError
+
+    merge_upsert(spark, spark.createDataFrame([(1, "x")], "id long, n string"), tmp_path, "t", ["id"])
+    clash = spark.createDataFrame([(2, 5)], "id long, n long")
+    with pytest.raises(Py4JJavaError, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        merge_upsert(spark, clash, tmp_path, "t", ["id"])
+    snap = spark.read.parquet(str(tmp_path / "t"))
+    assert snap.dtypes == [("id", "bigint"), ("n", "string")]
+    assert [tuple(r) for r in snap.collect()] == [(1, "x")]
+
+
+def test_merge_upsert_adds_new_batch_column_as_null(spark, tmp_path):
+    """A column the batch has and the snapshot lacks is added; rows
+    merged before it existed read NULL there (additive evolution)."""
+    b1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, val string")
+    wider = spark.createDataFrame([(2, "B2", 9)], "id long, val string, extra long")
+    merge_upsert(spark, b1, tmp_path, "t", ["id"])
+    merge_upsert(spark, wider, tmp_path, "t", ["id"])
+    got = sorted(tuple(r) for r in spark.read.parquet(str(tmp_path / "t")).collect())
+    assert got == [(1, "a", None), (2, "B2", 9)]
+
+
 def test_incremental_curation_two_batches(spark, tmp_path):
     """Two-run availableNow curation: batch 2 carries an exact dup of a
     batch-1 doc (different id), a low-quality doc, a disallowed-lang

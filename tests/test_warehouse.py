@@ -272,6 +272,37 @@ def test_streaming_to_warehouse_incremental_and_idempotent(wh, spark, tmp_path):
     assert got == 1  # MERGE updated in place, no duplicate key row
 
 
+def test_streaming_to_warehouse_releases_batch_cache(wh, spark, tmp_path):
+    """Each micro-batch caches its cleaned repos and releases them before
+    returning: a two-batch run leaves no new persistent RDD."""
+    import json
+
+    from incremental_github_data_pipeline_spark.sources import migrations as mig
+    from incremental_github_data_pipeline_spark.streaming.incremental import (
+        run_incremental_to_warehouse,
+    )
+
+    def repo(gid, name, stars):
+        return {
+            "id": gid, "name": name, "full_name": f"acme/{name}",
+            "owner": {"id": 1, "login": "acme"}, "visibility": "public",
+            "stargazers_count": stars, "watchers_count": 0, "forks_count": 0,
+            "open_issues_count": 0, "created_at": "2024-01-01T00:00:00Z",
+        }
+
+    mig.bootstrap(wh, mig.github_core_migrations())
+    raw, ckpt = tmp_path / "raw", tmp_path / "ckpt"
+    raw.mkdir()
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    (raw / "repos_raw_1.json").write_text(json.dumps([repo(1, "alpha", 5)]))
+    run_incremental_to_warehouse(spark, raw, wh, ckpt)
+    (raw / "repos_raw_2.json").write_text(json.dumps([repo(1, "alpha", 9), repo(2, "beta", 1)]))
+    run_incremental_to_warehouse(spark, raw, wh, ckpt)
+    stars = {r["repo_name"]: r["stargazers_count"] for r in wh.read_table("repos").collect()}
+    assert stars == {"alpha": 9, "beta": 1}
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - persisted == set()
+
+
 # ---------------------------------------------------------------------------
 # CDC changelog apply (insert/update/delete MERGE)
 # ---------------------------------------------------------------------------
