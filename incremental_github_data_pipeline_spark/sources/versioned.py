@@ -44,7 +44,7 @@ token in the manifest and turns a replayed commit with the same token
 into a no-op returning the already-committed version — the
 foreachBatch sink contract Structured Streaming requires (its
 checkpoint is only at-least-once; see
-``streaming.incremental.run_incremental_text_ingest``). Detection
+``streaming.incremental._run_versioned_ingest``). Detection
 scans retained manifests, so version retention must exceed the replay
 horizon (one batch, in practice) — the same contract as Delta's
 ``txn`` retention.

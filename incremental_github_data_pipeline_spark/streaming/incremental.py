@@ -8,8 +8,12 @@ manual rerun for Structured Streaming:
 - new raw JSON files arriving in a directory are discovered by a file
   stream (``availableNow`` trigger = "process everything that's here,
   then stop" — the scheduled-batch sweet spot);
-- each micro-batch runs the SAME batch cleaners (pipelines.github) via
-  ``foreachBatch`` — one transform codebase for both modes;
+- each micro-batch runs the SAME batch cleaners (pipelines.github) —
+  one transform codebase for both modes. Every ``run_incremental_*``
+  lane hands its per-batch fold to one driver
+  (:func:`_run_available_now`, and :func:`_run_versioned_ingest` for the
+  lanes that commit into ``sources.versioned``), which owns the
+  ``foreachBatch`` sink, the trigger, and the exactly-once contract;
 - the load is an idempotent keep-last MERGE on the uuid5 keys. Without
   a transactional table format in the environment we implement merge as
   read-current → union → keep-last → atomic snapshot rotation
@@ -39,6 +43,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
 from incremental_github_data_pipeline_spark.operators import core as ops
+from incremental_github_data_pipeline_spark.sources import versioned
 from incremental_github_data_pipeline_spark.sources.writers import write_rotating
 from incremental_github_data_pipeline_spark.sources.local import local_rows_df
 
@@ -54,6 +59,54 @@ def stream_json_dir(
         .option("multiLine", multiline)
         .json(str(path))
     )
+
+
+def _run_available_now(stream: DataFrame, checkpoint, process) -> None:
+    """Run ``process(batch_df, batch_id)`` on each micro-batch of
+    ``stream`` under the ``availableNow`` trigger: process what the
+    source holds now, checkpointed at ``checkpoint``, then return. A
+    batch that raises fails the run, and the next run replays it."""
+    (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", str(checkpoint))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _run_versioned_ingest(stream: DataFrame, checkpoint, fold) -> None:
+    """The driver of every lane that commits into ``sources.versioned``:
+    call ``fold(batch_df, batch_id, commit)`` on each micro-batch.
+
+    Exactly-once is the checkpoint plus an idempotent sink, not the
+    checkpoint alone. ``foreachBatch`` is at-least-once: a crash after
+    a commit but before the offset commit replays the batch. So
+    ``commit(df, root, tag, mode="append", **kw)`` calls
+    ``versioned.commit_version`` with ``txn_id = <tag>:<checkpoint>:
+    <batch_id>``, and a replayed commit is a no-op that returns the
+    version already committed (the batch-id dedup contract of the
+    Structured Streaming docs). Version retention must exceed the
+    one-batch replay horizon; vacuum keeps at least one version.
+
+    The tokens are persisted in table manifests, so a lane's tags never
+    change: a new tag would commit the first replay after an upgrade a
+    second time. A batch whose ``take(1)`` is empty is skipped (one
+    job, no commit). ``versioned.commit_version`` is looked up at call
+    time, so a patched one (tests, the perfbench tracer) takes effect.
+    """
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.take(1):
+            return
+
+        def commit(df: DataFrame, root, tag: str, mode: str = "append", **kw):
+            txn_id = f"{tag}:{checkpoint}:{batch_id}"
+            return versioned.commit_version(df, root, mode=mode, txn_id=txn_id, **kw)
+
+        fold(batch_df, batch_id, commit)
+
+    _run_available_now(stream, checkpoint, process)
 
 
 def merge_upsert(
@@ -194,13 +247,7 @@ def run_incremental_github(
             for df in cached:
                 df.unpersist()
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_available_now(stream, checkpoint_dir, process)
 
 
 # ---------------------------------------------------------------------------
@@ -812,54 +859,50 @@ def run_incremental_curation(
                 "text", min_tokens, max_mean_token_len, min_stopword_ratio
             )
         ).cache()
-        n_quality = passed.count()
         in_lang = passed.filter(F.col("lang").isin(list(langs))).cache()
-        n_lang = in_lang.count()
-        batch_unique = in_lang.transform(
-            lambda d: exact_dedup(d, ["text"], "doc_id")
-        )
-        target = out_dir / "curated_docs"
-        if target.exists():
-            curated = spark.read.parquet(str(target))
-            batch_keys = batch_unique.select(
-                content_key(["text"]).alias("_h")
-            ).distinct()
-            collided = (
-                curated.select(content_key(["text"]).alias("_h"))
-                .join(F.broadcast(batch_keys), "_h", "left_semi")
-                .distinct()
+        try:
+            n_quality = passed.count()
+            n_lang = in_lang.count()
+            batch_unique = in_lang.transform(
+                lambda d: exact_dedup(d, ["text"], "doc_id")
             )
-            survivors = (
-                batch_unique.withColumn("_h", content_key(["text"]))
-                .join(F.broadcast(collided), "_h", "left_anti")
-                .drop("_h")
-            )
-        else:
-            survivors = batch_unique
-        # materialize before the merge: merge_upsert rotates the curated
-        # snapshot directory, and a lazy survivors plan would re-read
-        # the replaced part files on the post-merge audit count
-        survivors = survivors.localCheckpoint(eager=True)
-        merge_upsert(spark, survivors, out_dir, "curated_docs", ["doc_id"])
-        if audit:
-            n_new = survivors.count()
-            for stage, n in (
-                ("raw", n_raw),
-                ("quality", n_quality),
-                ("lang", n_lang),
-                ("new", n_new),
-            ):
-                audit.log(f"curation batch {batch_id}: {stage} rows = {n}")
-        passed.unpersist()
-        in_lang.unpersist()
+            target = out_dir / "curated_docs"
+            if target.exists():
+                curated = spark.read.parquet(str(target))
+                batch_keys = batch_unique.select(
+                    content_key(["text"]).alias("_h")
+                ).distinct()
+                collided = (
+                    curated.select(content_key(["text"]).alias("_h"))
+                    .join(F.broadcast(batch_keys), "_h", "left_semi")
+                    .distinct()
+                )
+                survivors = (
+                    batch_unique.withColumn("_h", content_key(["text"]))
+                    .join(F.broadcast(collided), "_h", "left_anti")
+                    .drop("_h")
+                )
+            else:
+                survivors = batch_unique
+            # materialize before the merge: merge_upsert rotates the curated
+            # snapshot directory, and a lazy survivors plan would re-read
+            # the replaced part files on the post-merge audit count
+            survivors = survivors.localCheckpoint(eager=True)
+            merge_upsert(spark, survivors, out_dir, "curated_docs", ["doc_id"])
+            if audit:
+                n_new = survivors.count()
+                for stage, n in (
+                    ("raw", n_raw),
+                    ("quality", n_quality),
+                    ("lang", n_lang),
+                    ("new", n_new),
+                ):
+                    audit.log(f"curation batch {batch_id}: {stage} rows = {n}")
+        finally:
+            passed.unpersist()
+            in_lang.unpersist()
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_available_now(stream, checkpoint_dir, process)
 
 
 def run_incremental_curation_funnel(
@@ -903,12 +946,11 @@ def run_incremental_curation_funnel(
     keep-first order, the streaming analogue of (payload, record)
     order when shards land in payload order.
 
-    Exactly-once: every table commit carries
-    ``txn_id = cur-funnel-<table>:<checkpoint>:<batch_id>`` so
-    replayed batches are no-ops — including replays after a
-    MID-BATCH crash (ADVICE r13): claim rows carry the batch that
-    claimed them and ``drop_claimed`` reads only ``batch_id <
-    current``, so a replay never sees the crashed attempt's own
+    Exactly-once (:func:`_run_versioned_ingest`, tags
+    ``cur-funnel-<table>``) holds across a MID-BATCH crash too (ADVICE
+    r13): claim rows carry the batch that claimed them and
+    ``drop_claimed`` reads only ``batch_id < current``, so a replay
+    never sees the crashed attempt's own
     partial claims and recomputes bit-identically; output tables
     also commit BEFORE claim tables. Tables under ``table_root``:
     ``curated`` (payload_id, record_idx, url, text, n_tokens),
@@ -920,11 +962,6 @@ def run_incremental_curation_funnel(
     from incremental_github_data_pipeline_spark.operators import text as tx
     from incremental_github_data_pipeline_spark.operators.skew import (
         salted_keep_first,
-    )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-        latest_version,
-        read_version,
     )
 
     stream = spark.readStream.schema(
@@ -945,10 +982,10 @@ def run_incremental_curation_funnel(
         attempt landed, and every per-table txn_id then no-ops or
         fills the gap. Exactly-once holds across a mid-batch crash,
         not just across whole-batch replays."""
-        if latest_version(state_root) is None:
+        if versioned.latest_version(state_root) is None:
             return batch
         state = (
-            read_version(spark, state_root)
+            versioned.read_version(spark, state_root)
             .filter(F.col("batch_id") < F.lit(batch_id))
             .select(key)
         )
@@ -959,9 +996,7 @@ def run_incremental_curation_funnel(
         )
         return batch.join(F.broadcast(collided), key, "left_anti")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def fold(batch_df: DataFrame, batch_id: int, commit) -> None:
         recs = tx.warc_ingest(batch_df).localCheckpoint(eager=True)
         ok = recs.filter(
             (F.col("warc_type") == "response")
@@ -1083,12 +1118,7 @@ def run_incremental_curation_funnel(
             tx.redact_typed(F.col("kept_text")).alias("text"),
             F.col("kept_toks").alias("n_tokens"),
         ).localCheckpoint(eager=True)
-        commit_version(
-            curated,
-            f"{table_root}/curated",
-            mode="append",
-            txn_id=f"cur-funnel-curated:{checkpoint}:{batch_id}",
-        )
+        commit(curated, f"{table_root}/curated", "cur-funnel-curated")
 
         def audit(idx, name, frame, toks, chars):
             row = frame.agg(
@@ -1132,7 +1162,7 @@ def run_incremental_curation_funnel(
                   F.size(F.split("text", " ")).cast("long"),
                   F.col("text")),
         ]
-        commit_version(
+        commit(
             local_rows_df(
                 spark,
                 rows,
@@ -1140,23 +1170,21 @@ def run_incremental_curation_funnel(
                 "n_rows long, n_tokens long, n_chars long",
             ),
             f"{table_root}/audit",
-            mode="append",
-            txn_id=f"cur-funnel-audit:{checkpoint}:{batch_id}",
+            "cur-funnel-audit",
         )
         # claim tables commit LAST (ADVICE r13): outputs above derive
         # from pre-claim state, and drop_claimed scopes reads to
         # batch_id < current, so a crash between ANY two commits here
         # replays to a bit-identical recompute — committed tables
         # no-op on their txn_id, missing ones fill in.
-        commit_version(
+        commit(
             kept_docs.select(
                 "url", F.lit(batch_id).cast("long").alias("batch_id")
             ),
             f"{table_root}/url_state",
-            mode="append",
-            txn_id=f"cur-funnel-url:{checkpoint}:{batch_id}",
+            "cur-funnel-url",
         )
-        commit_version(
+        commit(
             kept_sents.select("sentence")
             .distinct()
             .select(
@@ -1164,17 +1192,10 @@ def run_incremental_curation_funnel(
                 F.lit(batch_id).cast("long").alias("batch_id"),
             ),
             f"{table_root}/sent_state",
-            mode="append",
-            txn_id=f"cur-funnel-sent:{checkpoint}:{batch_id}",
+            "cur-funnel-sent",
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", str(checkpoint))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_versioned_ingest(stream, checkpoint, fold)
 
 
 def run_incremental_cdc_ingest(
@@ -1200,28 +1221,21 @@ def run_incremental_cdc_ingest(
     one-shot distinct-chunk volume of the union corpus exactly.
 
     O(batch) work and O(new chunks) appended state at any corpus
-    size; exactly-once via per-table txn ids, and crash-safe across
-    a MID-BATCH failure (ADVICE r13): claim rows carry their batch
-    id and the claimed-scan reads only ``batch_id < current``, so a
+    size; exactly-once via :func:`_run_versioned_ingest` (tags
+    ``cdc-ledger``, ``cdc-state``), and crash-safe across a MID-BATCH
+    failure (ADVICE r13): claim rows carry their batch id and the claimed-scan reads only ``batch_id < current``, so a
     replay recomputes bit-identically whichever commits landed; the
     ledger commits before the claim table. Tables under
     ``table_root``: ``chunk_state`` (h1, h2, n_chars, batch_id),
     ``ledger`` (batch_id, n_chunks_in, n_new, chars_in,
     chars_new)."""
     from incremental_github_data_pipeline_spark.operators import text as tx
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-        latest_version,
-        read_version,
-    )
 
     stream = spark.readStream.schema(
         "doc_id long, text string"
     ).parquet(str(docs_dir))
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def fold(batch_df: DataFrame, batch_id: int, commit) -> None:
         chunks = tx.cdc_chunk_rows(
             batch_df.repartition(spark.sparkContext.defaultParallelism)
         ).select(
@@ -1233,11 +1247,11 @@ def run_incremental_cdc_ingest(
             F.first("n_chars").alias("n_chars")
         )
         state_root = f"{table_root}/chunk_state"
-        if latest_version(state_root) is not None:
+        if versioned.latest_version(state_root) is not None:
             # claims scoped to batch_id < current (ADVICE r13): a
             # replayed batch never sees its own partial claims, so
             # the recompute is bit-identical across a mid-batch crash
-            state = read_version(spark, state_root).filter(
+            state = versioned.read_version(spark, state_root).filter(
                 F.col("batch_id") < F.lit(batch_id)
             )
             batch_keys = batch_distinct.select("h1", "h2")
@@ -1260,7 +1274,7 @@ def run_incremental_cdc_ingest(
             .cast("long")
             .alias("chars_new"),
         ).collect()[0]
-        commit_version(
+        commit(
             local_rows_df(
                 spark,
                 [
@@ -1276,26 +1290,18 @@ def run_incremental_cdc_ingest(
                 "chars_in long, chars_new long",
             ),
             f"{table_root}/ledger",
-            mode="append",
-            txn_id=f"cdc-ledger:{checkpoint}:{batch_id}",
+            "cdc-ledger",
         )
         # claim table LAST (ADVICE r13) — see the funnel's twin note
-        commit_version(
+        commit(
             fresh.withColumn(
                 "batch_id", F.lit(batch_id).cast("long")
             ),
             state_root,
-            mode="append",
-            txn_id=f"cdc-state:{checkpoint}:{batch_id}",
+            "cdc-state",
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", str(checkpoint))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_versioned_ingest(stream, checkpoint, fold)
 
 
 def apply_changelog(
@@ -1436,13 +1442,7 @@ def run_incremental_to_warehouse(
         finally:
             repos.unpersist()
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_available_now(stream, checkpoint_dir, process)
 
 
 def running_totals_tws(events: DataFrame, user_col: str = "user_id") -> DataFrame:
@@ -1592,20 +1592,10 @@ def run_incremental_text_ingest(
     bad shard's ingestion can be time-traveled around. Decode runs
     where the bytes land, no shuffle.
 
-    Exactly-once is checkpoint + IDEMPOTENT sink, not checkpoint
-    alone: foreachBatch is at-least-once (a crash after the version
-    commit but before the offset commit replays the batch), so each
-    commit carries ``txn_id = <checkpoint>:<batch_id>`` and
-    ``commit_version`` turns the replay into a no-op returning the
-    already-committed version — the Structured Streaming docs'
-    batch-id-based dedup contract. Version retention must exceed the
-    one-batch replay horizon (it does: vacuum keeps ≥1 version)."""
-    from pyspark.sql import functions as F
-
+    Exactly-once as in :func:`_run_versioned_ingest` (tag
+    ``text-ingest``), with the empty-batch guard after the decode:
+    a ``take(1)`` of the ``binaryFile`` batch would read a whole shard."""
     from incremental_github_data_pipeline_spark.operators.text import gzip_ingest
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-    )
 
     stream = (
         spark.readStream.format("binaryFile")
@@ -1625,20 +1615,14 @@ def run_incremental_text_ingest(
             batch_df, payload_col="payload", id_col="shard", on_error=on_error
         )
         if docs.take(1):
-            commit_version(
+            versioned.commit_version(
                 docs.withColumn("n_chars", F.length("text").cast("long")),
                 table_root,
                 mode="append",
                 txn_id=f"text-ingest:{checkpoint}:{batch_id}",
             )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_available_now(stream, checkpoint, process)
 
 
 def run_incremental_index_ingest(
@@ -1664,28 +1648,21 @@ def run_incremental_index_ingest(
     ever touched by the query-term equi-join, never re-aggregated at
     serving time.
 
-    Exactly-once follows run_incremental_text_ingest: foreachBatch is
-    at-least-once, so each of the four commits carries
-    ``txn_id = index-<table>:<checkpoint>:<batch_id>`` and a replayed
-    batch becomes a no-op returning the committed version. Postings
-    commits record per-file term min/max bounds (``stats_cols``), so a
-    query-term search can file-skip before any parquet opens.
+    Exactly-once via :func:`_run_versioned_ingest` (tags
+    ``index-<table>``). Postings commits record per-file term min/max
+    bounds (``stats_cols``), so a query-term search can file-skip
+    before any parquet opens.
 
     Serving: :func:`bm25_search_versioned` — same scoring lane as
     ``operators.text.bm25_topk``; ``version`` time-travels the search
     to an earlier index state."""
     from incremental_github_data_pipeline_spark.operators.text import tokens
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-    )
 
     stream = spark.readStream.schema("doc_id long, text string").parquet(
         src_dir
     )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def fold(batch_df: DataFrame, batch_id: int, commit) -> None:
         toks = batch_df.select(
             "doc_id", F.explode(tokens(F.col("text"))).alias("term")
         )
@@ -1694,55 +1671,45 @@ def run_incremental_index_ingest(
             .agg(F.count(F.lit(1)).alias("tf"))
             .localCheckpoint(eager=True)  # one tokenize per batch
         )
-        commit_version(
+        commit(
             tf.select("term", "doc_id", "tf"),
             f"{table_root}/postings",
-            mode="append",
+            "index-postings",
             stats_cols=["term"],
-            txn_id=f"index-postings:{checkpoint}:{batch_id}",
         )
-        commit_version(
+        commit(
             tf.groupBy("term").agg(
                 F.count(F.lit(1)).alias("df_delta"),
                 F.sum("tf").alias("tf_delta"),
             ),
             f"{table_root}/termstats",
-            mode="append",
-            txn_id=f"index-termstats:{checkpoint}:{batch_id}",
+            "index-termstats",
         )
         # Per-doc lengths, committed in the same lockstep so serving
         # never has to rebuild them from the token-level postings (a
         # corpus-sized shuffle per search at 100 TB). O(batch): docs
         # only ever appear in one batch, so append is exact.
-        commit_version(
+        commit(
             tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")),
             f"{table_root}/doclens",
-            mode="append",
-            txn_id=f"index-doclens:{checkpoint}:{batch_id}",
+            "index-doclens",
         )
         n_docs = batch_df.count()
         total_len = (
             tf.agg(F.coalesce(F.sum("tf"), F.lit(0)).alias("t"))
             .collect()[0]["t"]
         )
-        commit_version(
+        commit(
             local_rows_df(
                 spark,
                 [(int(batch_id), int(n_docs), int(total_len))],
                 "batch_id long, n_docs long, total_len long",
             ),
             f"{table_root}/docstats",
-            mode="append",
-            txn_id=f"index-docstats:{checkpoint}:{batch_id}",
+            "index-docstats",
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_versioned_ingest(stream, checkpoint, fold)
 
 
 def bm25_search_versioned(
@@ -1773,9 +1740,6 @@ def bm25_search_versioned(
     were committed in lockstep (one version per batch per table, as
     the ingester does)."""
     from incremental_github_data_pipeline_spark.operators.text import tokens
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
 
     qterms = queries.select(
         F.col(qid_col), F.explode(tokens(F.col(qtext_col))).alias("term")
@@ -1783,22 +1747,22 @@ def bm25_search_versioned(
     term_list = sorted(
         r["term"] for r in qterms.select("term").distinct().collect()
     )
-    postings = read_version(
+    postings = versioned.read_version(
         spark,
         f"{table_root}/postings",
         version,
         skip_values=("term", term_list) if term_list else None,
     )
     termstats = (
-        read_version(spark, f"{table_root}/termstats", version)
+        versioned.read_version(spark, f"{table_root}/termstats", version)
         .groupBy("term")
         .agg(F.sum("df_delta").alias("df"))
     )
-    doc_tot = read_version(spark, f"{table_root}/docstats", version).agg(
+    doc_tot = versioned.read_version(spark, f"{table_root}/docstats", version).agg(
         F.sum("n_docs").alias("_n"),
         (F.sum("total_len") / F.sum("n_docs")).alias("_avgdl"),
     )
-    dl = read_version(spark, f"{table_root}/doclens", version)
+    dl = versioned.read_version(spark, f"{table_root}/doclens", version)
     hits = (
         qterms.join(postings, "term")
         .join(termstats, "term")
@@ -1857,18 +1821,14 @@ def run_incremental_ann_ingest(
     break ADC score comparability — the classic drifting-index bug).
 
     Encode is the Arrow map-side path (no shuffle; vectors never leave
-    the task that read them); exactly-once is checkpoint + idempotent
-    commit (``txn_id = ann-ingest:<checkpoint>:<batch_id>``), the same
-    contract as :func:`run_incremental_text_ingest`. Search the
+    the task that read them); exactly-once via
+    :func:`_run_versioned_ingest` (tag ``ann-ingest``). Search the
     result with :func:`ann_search_versioned`."""
     from incremental_github_data_pipeline_spark.operators.similarity import (
         load_pq_codebooks,
         pq_encode_arrow,
         pq_train,
         save_pq_codebooks,
-    )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
     )
 
     stream = (
@@ -1877,9 +1837,7 @@ def run_incremental_ann_ingest(
         .json(src_dir)
     )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def fold(batch_df: DataFrame, batch_id: int, commit) -> None:
         if Path(model_path).exists():
             codebooks = load_pq_codebooks(spark, model_path)
         else:
@@ -1888,20 +1846,13 @@ def run_incremental_ann_ingest(
             )
             save_pq_codebooks(spark, codebooks, model_path)
         enc = pq_encode_arrow(batch_df, "embedding", "vec_id", codebooks)
-        commit_version(
+        commit(
             enc,
             table_root,
-            mode="append",
-            txn_id=f"ann-ingest:{checkpoint}:{batch_id}",
+            "ann-ingest",
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_versioned_ingest(stream, checkpoint, fold)
 
 
 def ann_search_versioned(
@@ -1923,11 +1874,8 @@ def ann_search_versioned(
     from incremental_github_data_pipeline_spark.operators.similarity import (
         l2_normalize,
     )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
 
-    enc = read_version(spark, table_root, version=version)
+    enc = versioned.read_version(spark, table_root, version=version)
     qn = queries.select(F.col(query_id), l2_normalize(vec_col).alias("_qv"))
     scored = enc.crossJoin(F.broadcast(qn)).select(
         query_id,
@@ -2021,25 +1969,21 @@ def compact_index(
     time travel consistent is preserved (every table advances by one).
     Old versions stay readable; ``versioned.vacuum`` reclaims the
     small pre-compaction parts once out of retention."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        compact,
-    )
-
     return {
-        "postings": compact(
+        "postings": versioned.compact(
             spark,
             f"{table_root}/postings",
             target_partitions=target_partitions,
             cluster_cols=["term"],
         ),
-        "doclens": compact(
+        "doclens": versioned.compact(
             spark,
             f"{table_root}/doclens",
             target_partitions=target_partitions,
             cluster_cols=["doc_id"],
         ),
-        "termstats": compact(spark, f"{table_root}/termstats"),
-        "docstats": compact(spark, f"{table_root}/docstats"),
+        "termstats": versioned.compact(spark, f"{table_root}/termstats"),
+        "docstats": versioned.compact(spark, f"{table_root}/docstats"),
     }
 
 
@@ -2067,10 +2011,9 @@ def run_incremental_hll_ingest(
     size, and exact-replay determinism survives because the register
     table is integer arithmetic end-to-end.
 
-    Exactly-once: foreachBatch is at-least-once, so each commit
-    carries ``txn_id = hll-ingest:<checkpoint>:<batch_id>`` and a
-    replayed batch is a no-op. Commits use ``mode="overwrite"``
-    (the state is a snapshot, not a log), so every version is a
+    Exactly-once via :func:`_run_versioned_ingest` (tag
+    ``hll-ingest``). Commits use ``mode="overwrite"`` (the state is a
+    snapshot, not a log), so every version is a
     consistent time-traveled sketch of the stream so far; max-merge
     idempotence means even a torn retry that re-merges an already-
     folded batch cannot change the state. Serving: ``read_version`` +
@@ -2079,34 +2022,21 @@ def run_incremental_hll_ingest(
         hll_merge,
         hll_registers,
     )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-        latest_version,
-        read_version,
-    )
 
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def fold(batch_df: DataFrame, batch_id: int, commit) -> None:
         regs = hll_registers(batch_df, group_col, key_col, p=p)
-        if latest_version(table_root) is not None:
-            regs = hll_merge(read_version(spark, table_root), regs)
-        commit_version(
+        if versioned.latest_version(table_root) is not None:
+            regs = hll_merge(versioned.read_version(spark, table_root), regs)
+        commit(
             regs,
             table_root,
+            "hll-ingest",
             mode="overwrite",
-            txn_id=f"hll-ingest:{checkpoint}:{batch_id}",
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_versioned_ingest(stream, checkpoint, fold)
 
 
 def run_incremental_drift_ingest(
@@ -2130,19 +2060,13 @@ def run_incremental_drift_ingest(
     the same deltas-never-re-join-full-tables discipline as the BM25
     termstats table.
 
-    Exactly-once: ``txn_id = drift-ingest:<checkpoint>:<batch_id>``
-    makes replays no-ops. Late data is handled by construction — a
+    Exactly-once via :func:`_run_versioned_ingest` (tag
+    ``drift-ingest``). Late data is handled by construction — a
     late row just lands its deltas in a later version, and the fold
     is order-independent because addition commutes."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-    )
-
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def fold(batch_df: DataFrame, batch_id: int, commit) -> None:
         keyed = batch_df.select(
             F.col(window_col).alias("win"),
             F.json_object_keys(F.col(json_col)).alias("_keys"),
@@ -2168,20 +2092,13 @@ def run_incremental_drift_ingest(
                 "d_present",
             )
         )
-        commit_version(
+        commit(
             rows.unionByName(present),
             table_root,
-            mode="append",
-            txn_id=f"drift-ingest:{checkpoint}:{batch_id}",
+            "drift-ingest",
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_versioned_ingest(stream, checkpoint, fold)
 
 
 def drift_report_versioned(
@@ -2199,11 +2116,7 @@ def drift_report_versioned(
     must serve the identical report to a one-shot batch run (pinned in
     tests). ``version`` time-travels the report to an earlier ingest
     state."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
-
-    deltas = read_version(spark, table_root, version=version)
+    deltas = versioned.read_version(spark, table_root, version=version)
     per_win = (
         deltas.filter(F.col("key").isNull())
         .groupBy("win")
@@ -2272,36 +2185,23 @@ def run_incremental_tcloseness_ingest(
     privacy release gate becomes continuously maintained instead of
     recomputed from the fact table per release.
 
-    Exactly-once: ``txn_id = tclose-ingest:<checkpoint>:<batch_id>``
-    makes replays no-ops; late rows land their deltas in a later
+    Exactly-once via :func:`_run_versioned_ingest` (tag
+    ``tclose-ingest``); late rows land their deltas in a later
     version and the fold commutes (addition)."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-    )
-
     quasi = [quasi_cols] if isinstance(quasi_cols, str) else list(quasi_cols)
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def fold(batch_df: DataFrame, batch_id: int, commit) -> None:
         deltas = batch_df.groupBy(*quasi, sensitive_col).agg(
             F.count(F.lit(1)).alias("d_c")
         )
-        commit_version(
+        commit(
             deltas,
             table_root,
-            mode="append",
-            txn_id=f"tclose-ingest:{checkpoint}:{batch_id}",
+            "tclose-ingest",
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_versioned_ingest(stream, checkpoint, fold)
 
 
 def t_closeness_versioned(
@@ -2325,13 +2225,10 @@ def t_closeness_versioned(
     from incremental_github_data_pipeline_spark.operators.privacy import (
         t_closeness_from_counts,
     )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
 
     quasi = [quasi_cols] if isinstance(quasi_cols, str) else list(quasi_cols)
     counts = (
-        read_version(spark, table_root, version=version)
+        versioned.read_version(spark, table_root, version=version)
         .groupBy(*quasi, sensitive_col)
         .agg(F.sum("d_c").alias("_c"))
         .localCheckpoint(eager=True)  # the from_counts consumers fold it
@@ -2357,36 +2254,23 @@ def run_incremental_volume_ingest(
     + O(batch's windows × keys); :func:`volume_gate_versioned` folds
     the log at serving time, so the ingest-freshness breaker runs on
     continuously maintained counts instead of re-scanning the fact
-    table per check. Exactly-once via
-    ``txn_id = volume-ingest:<checkpoint>:<batch_id>``; a late row
-    lands its delta in a later version and the fold commutes."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-    )
-
+    table per check. Exactly-once via :func:`_run_versioned_ingest`
+    (tag ``volume-ingest``); a late row lands its delta in a later
+    version and the fold commutes."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols or [])
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def fold(batch_df: DataFrame, batch_id: int, commit) -> None:
         deltas = batch_df.groupBy(*keys, window_col).agg(
             F.count(F.lit(1)).alias("d_rows")
         )
-        commit_version(
+        commit(
             deltas,
             table_root,
-            mode="append",
-            txn_id=f"volume-ingest:{checkpoint}:{batch_id}",
+            "volume-ingest",
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_versioned_ingest(stream, checkpoint, fold)
 
 
 def volume_gate_versioned(
@@ -2410,13 +2294,10 @@ def volume_gate_versioned(
     from incremental_github_data_pipeline_spark.operators.quality import (
         volume_gate_from_counts,
     )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
 
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols or [])
     counts = (
-        read_version(spark, table_root, version=version)
+        versioned.read_version(spark, table_root, version=version)
         .groupBy(*keys, window_col)
         .agg(F.sum("d_rows").alias("n_rows"))
     )
@@ -2449,43 +2330,29 @@ def run_incremental_kmv_ingest(
     ``read_version`` + ``kmv_estimate`` (integer-exact) or
     ``kmv_jaccard`` between groups at any version.
 
-    Exactly-once: ``txn_id = kmv-ingest:<checkpoint>:<batch_id>``
-    makes replayed batches no-ops; overwrite commits keep every
-    version a consistent snapshot, and merge idempotence means a torn
-    retry that re-folds an already-merged batch cannot change the
-    state."""
+    Exactly-once via :func:`_run_versioned_ingest` (tag
+    ``kmv-ingest``); overwrite commits keep every version a consistent
+    snapshot, and merge idempotence means a torn retry that re-folds
+    an already-merged batch cannot change the state."""
     from incremental_github_data_pipeline_spark.operators.incremental_agg import (
         kmv_merge,
         kmv_sketch,
     )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-        latest_version,
-        read_version,
-    )
 
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def fold(batch_df: DataFrame, batch_id: int, commit) -> None:
         sk = kmv_sketch(batch_df, group_col, key_col, k=k)
-        if latest_version(table_root) is not None:
-            sk = kmv_merge(read_version(spark, table_root), sk, k=k)
-        commit_version(
+        if versioned.latest_version(table_root) is not None:
+            sk = kmv_merge(versioned.read_version(spark, table_root), sk, k=k)
+        commit(
             sk,
             table_root,
+            "kmv-ingest",
             mode="overwrite",
-            txn_id=f"kmv-ingest:{checkpoint}:{batch_id}",
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_versioned_ingest(stream, checkpoint, fold)
 
 
 def run_incremental_profile_ingest(
@@ -2509,35 +2376,23 @@ def run_incremental_profile_ingest(
     everything ingested — the always-fresh data-quality dashboard
     primitive.
 
-    Exactly-once: ``txn_id = profile-ingest:<checkpoint>:<batch_id>``
-    makes replays no-ops; late data just lands its deltas in a later
+    Exactly-once via :func:`_run_versioned_ingest` (tag
+    ``profile-ingest``); late data just lands its deltas in a later
     version (addition commutes)."""
     from incremental_github_data_pipeline_spark.operators.quality import (
         profile_histogram,
     )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-    )
 
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        commit_version(
+    def fold(batch_df: DataFrame, batch_id: int, commit) -> None:
+        commit(
             profile_histogram(batch_df, cols),
             table_root,
-            mode="append",
-            txn_id=f"profile-ingest:{checkpoint}:{batch_id}",
+            "profile-ingest",
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_versioned_ingest(stream, checkpoint, fold)
 
 
 def profile_versioned(
@@ -2546,16 +2401,11 @@ def profile_versioned(
     """Serve the column profile at any version: fold the histogram
     delta log by sum, finish through the shared lanes. O(distinct
     values in the log), never re-reads raw data."""
-    from pyspark.sql import functions as F
-
     from incremental_github_data_pipeline_spark.operators.quality import (
         profile_from_hist,
     )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
 
-    log = read_version(spark, table_root, version=version)
+    log = versioned.read_version(spark, table_root, version=version)
     hist = log.groupBy("column", "_v").agg(F.sum("_n").alias("_n"))
     return profile_from_hist(hist)
 
@@ -2591,23 +2441,17 @@ def run_incremental_cc_ingest(
     Per-batch cost: one column-pruned fold-read of the label log (the
     versioned store's compaction keeps it proportional to live
     nodes), O(batch) contraction + batch-sized CC, O(affected)
-    append. Exactly-once: ``txn_id = cc-ingest:<checkpoint>:
-    <batch_id>`` makes replayed batches no-ops, and the upsert log is
-    insensitive to re-appending an identical relabeling (last-writer
-    -wins serving folds duplicates away)."""
+    append. Exactly-once via :func:`_run_versioned_ingest` (tag
+    ``cc-ingest``), and the upsert log is insensitive to re-appending
+    an identical relabeling (last-writer-wins serving folds duplicates
+    away)."""
     from incremental_github_data_pipeline_spark.operators.dedup import (
         connected_components,
-    )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-        latest_version,
     )
 
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def fold(batch_df: DataFrame, batch_id: int, commit) -> None:
         edges = (
             batch_df.select(
                 F.col(id_a).alias("_a"), F.col(id_b).alias("_b")
@@ -2615,7 +2459,7 @@ def run_incremental_cc_ingest(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        if latest_version(table_root) is not None:
+        if versioned.latest_version(table_root) is not None:
             cur = cc_versioned(spark, table_root).localCheckpoint(
                 eager=True
             )
@@ -2684,20 +2528,13 @@ def run_incremental_cc_ingest(
         )
         if not upserts.take(1):
             return
-        commit_version(
+        commit(
             upserts,
             table_root,
-            mode="append",
-            txn_id=f"cc-ingest:{checkpoint}:{batch_id}",
+            "cc-ingest",
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_versioned_ingest(stream, checkpoint, fold)
 
 
 def cc_versioned(
@@ -2709,13 +2546,7 @@ def cc_versioned(
     ``(id, component)``, bit-identical to
     ``dedup.connected_components`` over every edge ingested up to
     ``version``."""
-    from pyspark.sql import Window
-
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
-
-    log = read_version(spark, table_root, version=version)
+    log = versioned.read_version(spark, table_root, version=version)
     w = Window.partitionBy("id").orderBy(F.col("_seq").desc())
     return (
         log.withColumn("_rn", F.row_number().over(w))
@@ -2761,14 +2592,9 @@ def run_incremental_keep_best_ingest(
     are algebraic (sum / max are associative over the merged sets),
     which is the whole point of the composition.
 
-    Exactly-once via ``txn_id = keep-best:<checkpoint>:<batch_id>``.
+    Exactly-once via :func:`_run_versioned_ingest` (tag ``keep-best``).
     Contract: doc ids are unique across all batches (each doc counts
     once), and ``id_col`` is integral (the keep_best tie-break)."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-        latest_version,
-    )
-
     stream = spark.readStream.schema(schema).parquet(docs_dir)
 
     def best_key(prefix: F.Column | None = None):
@@ -2779,12 +2605,10 @@ def run_incremental_keep_best_ingest(
             (-i.cast("decimal(38,0)")).alias("_negid"),
         )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def fold(batch_df: DataFrame, batch_id: int, commit) -> None:
         docs = batch_df.localCheckpoint(eager=True)
         doc_cols = docs.columns
-        if latest_version(cc_root) is not None:
+        if versioned.latest_version(cc_root) is not None:
             labels = cc_versioned(spark, cc_root)
         else:
             labels = docs.select(F.col(id_col).alias("id")).limit(
@@ -2801,7 +2625,7 @@ def run_incremental_keep_best_ingest(
             ).alias("best"),
             F.count(F.lit(1)).cast("long").alias("n_docs"),
         ).localCheckpoint(eager=True)
-        if latest_version(table_root) is not None:
+        if versioned.latest_version(table_root) is not None:
             prior = _keep_best_fold(
                 spark, table_root, before_seq=batch_id
             ).join(
@@ -2821,20 +2645,13 @@ def run_incremental_keep_best_ingest(
             )
         else:
             merged = batch_best
-        commit_version(
+        commit(
             merged.withColumn("_seq", F.lit(batch_id).cast("long")),
             table_root,
-            mode="append",
-            txn_id=f"keep-best:{checkpoint}:{batch_id}",
+            "keep-best",
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_versioned_ingest(stream, checkpoint, fold)
 
 
 def _keep_best_fold(
@@ -2852,13 +2669,7 @@ def _keep_best_fold(
     state instead of folding its own earlier write back in — making
     the recomputed merge bit-identical, the same scoping the funnel
     and CDC ingests apply via ``batch_id < current`` claims."""
-    from pyspark.sql import Window
-
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
-
-    log = read_version(spark, table_root, version=version)
+    log = versioned.read_version(spark, table_root, version=version)
     if before_seq is not None:
         log = log.filter(F.col("_seq") < F.lit(int(before_seq)))
     w = Window.partitionBy("component").orderBy(F.col("_seq").desc())
@@ -2892,12 +2703,8 @@ def keep_best_versioned(
     Returns the full best-doc rows plus ``component`` and ``n_docs``,
     bit-identical to ``dedup.keep_best_of_cluster`` over every doc
     and edge ingested up to the given versions."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        latest_version,
-    )
-
     cur = _keep_best_fold(spark, table_root, version=version)
-    if latest_version(cc_root) is not None:
+    if versioned.latest_version(cc_root) is not None:
         labels = cc_versioned(spark, cc_root, version=cc_version)
     else:
         labels = cur.select(
@@ -2938,11 +2745,7 @@ def _assert_pinned_params(
     (or Bloom positions hashed under a different geometry) silently
     corrupts the index (zeroed LSH recall / Bloom false negatives).
     1-row sidecar read: bounded by construction."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
-
-    pinned = read_version(spark, params_root).collect()[0]
+    pinned = versioned.read_version(spark, params_root).collect()[0]
     diffs = {
         name: (pinned[name], value)
         for name, value in called.items()
@@ -2986,9 +2789,8 @@ def run_incremental_lsh_ingest(
     a query's bucket probes FILE-SKIP before any parquet opens — the
     same Iceberg-style pruning the BM25 postings use for terms.
 
-    Exactly-once: ``txn_id = lsh-ingest:<checkpoint>:<batch_id>``
-    makes replayed batches no-ops. Serving:
-    :func:`lsh_candidates_versioned` — band the query docs with the
+    Exactly-once via :func:`_run_versioned_ingest` (tag
+    ``lsh-ingest``). Serving: :func:`lsh_candidates_versioned` — band the query docs with the
     SAME parameters and equi-join the postings; parameters are part
     of the index contract (mixing band counts across versions would
     silently zero the collision probability), so they are pinned in a
@@ -3000,10 +2802,6 @@ def run_incremental_lsh_ingest(
         minhash_bands,
         minhash_signature,
     )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-        latest_version,
-    )
 
     stream = spark.readStream.schema("doc_id long, text string").parquet(
         src_dir
@@ -3012,11 +2810,9 @@ def run_incremental_lsh_ingest(
     if rows_per_band * bands != num_hashes:
         raise ValueError("bands must divide num_hashes")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        if latest_version(f"{table_root}/postings") is None:
-            commit_version(
+    def fold(batch_df: DataFrame, batch_id: int, commit) -> None:
+        if versioned.latest_version(f"{table_root}/postings") is None:
+            versioned.commit_version(
                 local_rows_df(
                     spark,
                     [(num_hashes, bands, k)],
@@ -3057,21 +2853,14 @@ def run_incremental_lsh_ingest(
             F.col("_bk.bucket").alias("bucket"),
             "doc_id",
         )
-        commit_version(
+        commit(
             keys.repartitionByRange(8, "bucket"),
             f"{table_root}/postings",
-            mode="append",
+            "lsh-ingest",
             stats_cols=["bucket"],
-            txn_id=f"lsh-ingest:{checkpoint}:{batch_id}",
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_versioned_ingest(stream, checkpoint, fold)
 
 
 def lsh_candidates_versioned(
@@ -3097,11 +2886,8 @@ def lsh_candidates_versioned(
         minhash_bands,
         minhash_signature,
     )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
 
-    p = read_version(spark, f"{table_root}/params").collect()[0]
+    p = versioned.read_version(spark, f"{table_root}/params").collect()[0]
     rows_per_band = p["num_hashes"] // p["bands"]
     qk = queries.select(
         F.col(qid_col).alias("query_id"),
@@ -3119,7 +2905,7 @@ def lsh_candidates_versioned(
         F.col("_bk.bucket").alias("bucket"),
         "query_id",
     )
-    idx = read_version(spark, f"{table_root}/postings", version=version)
+    idx = versioned.read_version(spark, f"{table_root}/postings", version=version)
     return (
         idx.join(qk, ["band", "bucket"])
         .select("query_id", "doc_id")
@@ -3160,12 +2946,8 @@ def run_incremental_bloom_ingest(
     matching the batch twin ``dedup.build_bloom``'s contract — the
     serving fold packs positions into 64-bit words, so a ragged width
     would otherwise get permanently pinned and break every serve.
-    Exactly-once: ``txn_id = bloom-ingest:<checkpoint>:<batch_id>``."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-        latest_version,
-    )
-
+    Exactly-once via :func:`_run_versioned_ingest` (tag
+    ``bloom-ingest``)."""
     if n_bits <= 0 or n_bits % 64 != 0:
         raise ValueError("n_bits must be a positive multiple of 64")
     if n_hashes < 1:
@@ -3173,11 +2955,9 @@ def run_incremental_bloom_ingest(
 
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        if latest_version(f"{table_root}/positions") is None:
-            commit_version(
+    def fold(batch_df: DataFrame, batch_id: int, commit) -> None:
+        if versioned.latest_version(f"{table_root}/positions") is None:
+            versioned.commit_version(
                 local_rows_df(
                     spark,
                     [(n_bits, n_hashes)], "n_bits int, n_hashes int"
@@ -3206,20 +2986,13 @@ def run_incremental_bloom_ingest(
                 )
             ).alias("p")
         ).distinct()
-        commit_version(
+        commit(
             positions,
             f"{table_root}/positions",
-            mode="append",
-            txn_id=f"bloom-ingest:{checkpoint}:{batch_id}",
+            "bloom-ingest",
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_versioned_ingest(stream, checkpoint, fold)
 
 
 def bloom_versioned(
@@ -3230,13 +3003,9 @@ def bloom_versioned(
     ``dedup.bloom_might_contain``. The fold is a distinct over the
     position log — ≤ ``n_bits`` rows whatever the corpus size, the
     same bounded-model collect class as the filter itself."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
-
-    p = read_version(spark, f"{table_root}/params").collect()[0]
+    p = versioned.read_version(spark, f"{table_root}/params").collect()[0]
     rows = (
-        read_version(spark, f"{table_root}/positions", version=version)
+        versioned.read_version(spark, f"{table_root}/positions", version=version)
         .distinct()
         .collect()
     )
@@ -3282,24 +3051,16 @@ def compact_cc_log(spark: SparkSession, table_root: str) -> int:
     log is identical by construction (the fold is idempotent); older
     versions stay time-travelable; OCC pins the tip so a concurrent
     ingest raises instead of being dropped."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-        latest_version,
-        read_version,
-    )
-
-    cur = latest_version(table_root)
+    cur = versioned.latest_version(table_root)
     if cur is None:
         raise ValueError("cannot compact an empty CC log")
-    from pyspark.sql import Window
-
-    log = read_version(spark, table_root, version=cur)
+    log = versioned.read_version(spark, table_root, version=cur)
     w = Window.partitionBy("id").orderBy(F.col("_seq").desc())
     folded = (
         log.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select("id", "component", "_seq")
     )
-    return commit_version(
+    return versioned.commit_version(
         folded, table_root, mode="overwrite", expected_version=cur
     )

@@ -386,6 +386,13 @@ def _persistent_rdd_ids(spark):
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
+def _cached_rdd_ids(spark):
+    """Persistent RDDs that are caches, not local checkpoints (a
+    localCheckpoint persists its RDD until the frame is collected)."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {i for i in rdds.keySet() if not rdds.get(i).rdd().isLocallyCheckpointed()}
+
+
 def test_incremental_github_five_tables_keep_last_and_replay(spark, tmp_path):
     """Two batches written here through all five tables: updates win,
     null-key and orphan rows are dropped, users join authors and
@@ -554,6 +561,43 @@ def test_incremental_curation_two_batches(spark, tmp_path):
     run_incremental_curation(spark, docs_dir, out_dir, ckpt, audit_log=audit)
     again = spark.read.parquet(str(out_dir / "curated_docs"))
     assert sorted(r["doc_id"] for r in again.collect()) == [1, 2, 13]
+
+
+_CURATION_GOOD = (
+    "the cat and the dog sat in the house and it was warm and the "
+    "sun was up and the day was long and all of it was good for them"
+)
+
+
+def _land_curation(docs_dir, name, ids):
+    docs_dir.mkdir(exist_ok=True)
+    (docs_dir / name).write_text(
+        "".join(
+            json.dumps({"doc_id": i, "text": f"{_CURATION_GOOD} {i}", "lang": "en", "source": "s"}) + "\n"
+            for i in ids
+        )
+    )
+
+
+def test_incremental_curation_failed_merge_releases_caches(spark, tmp_path):
+    """The merge of a batch fails (the snapshot holds doc_id as a
+    string): the run raises, and the batch's cached frames are
+    released."""
+    from pyspark.errors import StreamingQueryException
+
+    from incremental_github_data_pipeline_spark.streaming.incremental import (
+        run_incremental_curation,
+    )
+
+    docs, out = tmp_path / "docs", tmp_path / "out"
+    _land_curation(docs, "b1.jsonl", range(3))
+    spark.createDataFrame(
+        [("9", "other", "en", "s")], "doc_id string, text string, lang string, source string"
+    ).write.parquet(str(out / "curated_docs"))
+    persisted = _persistent_rdd_ids(spark)
+    with pytest.raises(StreamingQueryException, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        run_incremental_curation(spark, docs, out, tmp_path / "ckpt")
+    assert _cached_rdd_ids(spark) - persisted == set()
 
 
 def test_apply_changelog_upsert_delete_idempotent(spark):
@@ -2619,66 +2663,297 @@ def test_curation_funnel_mid_batch_crash_replays_exactly_once(
         assert want.exceptAll(got).isEmpty(), table
 
 
-def test_cdc_ingest_mid_batch_crash_replays_exactly_once(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r13 (medium), CDC-ledger twin: crash after the ledger
-    commit but before the chunk_state commit; the replay must fill in
-    the claim table without double-counting the ledger."""
-    from incremental_github_data_pipeline_spark.sources import versioned
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
-    from incremental_github_data_pipeline_spark.streaming import (
-        run_incremental_cdc_ingest,
-    )
+def _replay_text(i):
+    return " ".join(f"w{(i * 11 + j) % 97} t{j % 5}" for j in range(50))
 
-    def doc(i):
-        return " ".join(
-            f"w{(i * 11 + j) % 97} t{j % 5}" for j in range(50)
+
+def _replay_vec(i):
+    return [((i * 7 + d * 13) % 29) / 29.0 + 0.05 for d in range(16)]
+
+
+def _land_rows(schema, batches):
+    def land(spark, src, b):
+        spark.createDataFrame(batches[b], schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(str(src))
+
+    return land
+
+
+def _land_vectors(spark, src, b):
+    src.mkdir(exist_ok=True)
+    (src / f"b{b}.jsonl").write_text(
+        "\n".join(
+            json.dumps({"vec_id": i, "embedding": _replay_vec(i)})
+            for i in range(40 * b, 40 * b + 40)
         )
+    )
 
-    b1 = [(i, doc(i)) for i in range(20)]
-    b2 = [(100 + i, doc(i)) for i in range(10)] + [
-        (200 + i, doc(500 + i)) for i in range(10)
-    ]
 
-    def run_two(tag, crash_on_batch2):
-        src = tmp_path / f"docs_{tag}"
-        root = str(tmp_path / f"cdc_{tag}")
-        ckpt = str(tmp_path / f"ckpt_cdc_{tag}")
-        sch = "doc_id long, text string"
-        spark.createDataFrame(b1, sch).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-        run_incremental_cdc_ingest(spark, str(src), root, ckpt)
-        spark.createDataFrame(b2, sch).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-        if crash_on_batch2:
-            real = versioned.commit_version
-            calls = {"n": 0}
+_REPLAY_DOCS = _land_rows(
+    "doc_id long, text string",
+    [
+        [(i, _replay_text(i)) for i in range(20)],
+        # half of batch 2 repeats batch-1 texts under new ids
+        [(100 + i, _replay_text(i)) for i in range(10, 30)],
+    ],
+)
+_REPLAY_KEYS = _land_rows(
+    "seg string, user_id long",
+    [
+        [("a", i) for i in range(30)] + [("b", i) for i in range(10)],
+        [("a", i) for i in range(20, 45)] + [("b", i) for i in range(10, 15)],
+    ],
+)
+_REPLAY_BEST_DOCS = "doc_id long, text string, q long"
 
-            def crashing(*a, **kw):
-                if calls["n"] >= 1:  # ledger lands, chunk_state not
-                    raise RuntimeError("planted mid-batch crash")
-                calls["n"] += 1
-                return real(*a, **kw)
 
-            monkeypatch.setattr(versioned, "commit_version", crashing)
-            with pytest.raises(Exception, match="planted mid-batch"):
-                run_incremental_cdc_ingest(spark, str(src), root, ckpt)
-            monkeypatch.setattr(versioned, "commit_version", real)
-        run_incremental_cdc_ingest(spark, str(src), root, ckpt)
-        return root
+def _keep_best_ingest(spark, src, root, ckpt):
+    """Keep-best over a fixed CC labeling, {1, 2, 3, 4, 11} and
+    {7, 8, 12}: batch 2's docs 11 and 12 join components batch 1 has
+    bests for, so the replay must scope the prior fold to batch 1."""
+    from incremental_github_data_pipeline_spark.sources import versioned
+    from incremental_github_data_pipeline_spark.streaming import (
+        run_incremental_keep_best_ingest,
+    )
 
-    root_c = run_two("crash", True)
-    root_ok = run_two("clean", False)
-    for table in ("ledger", "chunk_state"):
-        got = read_version(spark, f"{root_c}/{table}")
-        want = read_version(spark, f"{root_ok}/{table}")
+    cc = f"{root}/cc"
+    if versioned.latest_version(cc) is None:
+        versioned.commit_version(
+            spark.createDataFrame(
+                [(i, 1, 0) for i in (1, 2, 3, 4, 11)] + [(i, 7, 0) for i in (7, 8, 12)],
+                "id long, component long, _seq long",
+            ),
+            cc,
+        )
+    run_incremental_keep_best_ingest(
+        spark, src, f"{root}/best", ckpt, _REPLAY_BEST_DOCS, cc, "q"
+    )
+
+
+def _replay_lanes():
+    """lane -> (land(spark, src, batch), ingest(spark, src, root, ckpt),
+    {table under root: the txn token format its manifests record})."""
+    from incremental_github_data_pipeline_spark.streaming import incremental as st
+
+    keys = "seg string, user_id long"
+    return {
+        "index": (
+            _REPLAY_DOCS,
+            st.run_incremental_index_ingest,
+            {
+                t: f"index-{t}:{{ckpt}}:{{b}}"
+                for t in ("postings", "termstats", "doclens", "docstats")
+            },
+        ),
+        "ann": (
+            _land_vectors,
+            lambda spark, src, root, ckpt: st.run_incremental_ann_ingest(
+                spark, src, f"{root}/enc", f"{root}/model", ckpt, m_sub=4, ksub=8
+            ),
+            {"enc": "ann-ingest:{ckpt}:{b}"},
+        ),
+        "hll": (
+            _REPLAY_KEYS,
+            lambda spark, src, root, ckpt: st.run_incremental_hll_ingest(
+                spark, src, root, ckpt, keys, "seg", "user_id", p=6
+            ),
+            {"": "hll-ingest:{ckpt}:{b}"},
+        ),
+        "kmv": (
+            _REPLAY_KEYS,
+            lambda spark, src, root, ckpt: st.run_incremental_kmv_ingest(
+                spark, src, root, ckpt, keys, "seg", "user_id", k=16
+            ),
+            {"": "kmv-ingest:{ckpt}:{b}"},
+        ),
+        "cc": (
+            _land_rows(
+                "id_a long, id_b long",
+                [[(1, 2), (5, 6), (10, 11)], [(2, 5), (20, 21), (0, 10)]],
+            ),
+            lambda spark, src, root, ckpt: st.run_incremental_cc_ingest(
+                spark, src, root, ckpt, "id_a long, id_b long"
+            ),
+            {"": "cc-ingest:{ckpt}:{b}"},
+        ),
+        "keep_best": (
+            _land_rows(
+                _REPLAY_BEST_DOCS,
+                [
+                    [(1, "a", 10), (2, "b", 30), (3, "c", 20), (4, "d", 20),
+                     (7, "g", 5), (8, "h", 9)],
+                    [(11, "k", 40), (12, "l", 9), (13, "m", 1)],
+                ],
+            ),
+            _keep_best_ingest,
+            {"best": "keep-best:{ckpt}:{b}"},
+        ),
+        "lsh": (
+            _REPLAY_DOCS,
+            lambda spark, src, root, ckpt: st.run_incremental_lsh_ingest(
+                spark, src, root, ckpt, num_hashes=16, bands=8
+            ),
+            {"postings": "lsh-ingest:{ckpt}:{b}", "params": "lsh-params:{ckpt}"},
+        ),
+        "bloom": (
+            _REPLAY_KEYS,
+            lambda spark, src, root, ckpt: st.run_incremental_bloom_ingest(
+                spark, src, root, ckpt, keys, "user_id", n_bits=1024, n_hashes=3
+            ),
+            {"positions": "bloom-ingest:{ckpt}:{b}", "params": "bloom-params:{ckpt}"},
+        ),
+        # the ledger lands, the claim table does not: the replay fills
+        # it in without counting the ledger twice
+        "cdc": (
+            _REPLAY_DOCS,
+            st.run_incremental_cdc_ingest,
+            {"ledger": "cdc-ledger:{ckpt}:{b}", "chunk_state": "cdc-state:{ckpt}:{b}"},
+        ),
+    }
+
+
+def _run_two_batches(spark, lane, base, crash_batch2=None):
+    """Ingest two batches of ``lane`` under ``base``; ``crash_batch2``
+    runs batch 2 once first with that ``commit_version`` in place."""
+    from incremental_github_data_pipeline_spark.sources import versioned
+
+    land, ingest, _ = _replay_lanes()[lane]
+    src, root, ckpt = base / "src", str(base / "t"), str(base / "ckpt")
+    land(spark, src, 0)
+    ingest(spark, str(src), root, ckpt)
+    land(spark, src, 1)
+    if crash_batch2 is not None:
+        real = versioned.commit_version
+        versioned.commit_version = crash_batch2
+        try:
+            with pytest.raises(Exception, match="planted crash"):
+                ingest(spark, str(src), root, ckpt)
+        finally:
+            versioned.commit_version = real
+    ingest(spark, str(src), root, ckpt)
+    return root, ckpt
+
+
+@pytest.fixture(scope="module")
+def _replay_clean(spark, tmp_path_factory):
+    """The crash-free two-batch run of each lane, made once per module."""
+    runs = {}
+
+    def clean(lane):
+        if lane not in runs:
+            runs[lane] = _run_two_batches(spark, lane, tmp_path_factory.mktemp(lane))[0]
+        return runs[lane]
+
+    return clean
+
+
+@pytest.mark.parametrize(
+    "lane", ["index", "ann", "hll", "kmv", "cc", "keep_best", "lsh", "bloom", "cdc"]
+)
+def test_versioned_ingest_crash_after_commit_replays_exactly_once(
+    spark, tmp_path, lane, _replay_clean
+):
+    """Batch 2 crashes right after its first commit lands (the
+    at-least-once replay ``foreachBatch`` produces); the rerun must
+    leave every table equal to a crash-free run, and every manifest
+    must record the lane's txn token once per batch."""
+    from incremental_github_data_pipeline_spark.sources import versioned
+
+    real, calls = versioned.commit_version, []
+
+    def crash_after_commit(*a, **kw):
+        calls.append(real(*a, **kw))
+        raise RuntimeError("planted crash after a commit")
+
+    root, ckpt = _run_two_batches(spark, lane, tmp_path, crash_after_commit)
+    assert len(calls) == 1
+    want_root = _replay_clean(lane)
+    for table, token in _replay_lanes()[lane][2].items():
+        got = versioned.read_version(spark, f"{root}/{table}")
+        want = versioned.read_version(spark, f"{want_root}/{table}")
         assert got.count() == want.count(), table
         assert got.exceptAll(want).isEmpty(), table
+        assert want.exceptAll(got).isEmpty(), table
+        txns = [m["txn"] for m in versioned.history(f"{root}/{table}")]
+        assert txns == list(dict.fromkeys(token.format(ckpt=ckpt, b=b) for b in (0, 1))), table
+
+
+def _stream_jobs(spark, run):
+    """Spark jobs in the job group of the one streaming query ``run``
+    starts (its runId); a caller's job group does not reach the stream
+    thread."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    run_ids = []
+
+    class Started(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            run_ids.append(str(event.runId))
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = Started()
+    spark.streams.addListener(listener)
+    try:
+        run()
+    finally:
+        spark.streams.removeListener(listener)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    (run_id,) = run_ids
+    return len(sc.statusTracker().getJobIdsForGroup(run_id))
+
+
+@pytest.mark.parametrize(
+    "lane, jobs",
+    [("index", [16, 16]), ("hll", [3, 4]), ("curation", [12, 17])],
+)
+def test_ingest_jobs_per_micro_batch_are_pinned(spark, tmp_path, lane, jobs):
+    """Jobs of the first and of a later micro-batch of 100 rows each,
+    counted in the streaming query's own job group."""
+    from incremental_github_data_pipeline_spark.streaming.incremental import (
+        run_incremental_curation,
+        run_incremental_hll_ingest,
+        run_incremental_index_ingest,
+    )
+
+    src, root, ckpt = tmp_path / "src", str(tmp_path / "t"), str(tmp_path / "ckpt")
+    runs = {
+        "index": (
+            _land_rows(
+                "doc_id long, text string",
+                [[(i, _replay_text(i)) for i in range(100 * b, 100 * b + 100)] for b in (0, 1)],
+            ),
+            lambda: run_incremental_index_ingest(spark, str(src), root, ckpt),
+        ),
+        "hll": (
+            _land_rows(
+                "seg string, user_id long",
+                [[("ab"[i % 2], i) for i in range(50 * b, 50 * b + 100)] for b in (0, 1)],
+            ),
+            lambda: run_incremental_hll_ingest(
+                spark, str(src), root, ckpt, "seg string, user_id long", "seg", "user_id"
+            ),
+        ),
+        "curation": (
+            lambda spark, src, b: _land_curation(src, f"b{b}.jsonl", range(100 * b, 100 * b + 100)),
+            lambda: run_incremental_curation(spark, src, root, ckpt),
+        ),
+    }
+    land, run = runs[lane]
+    got = []
+    for b in (0, 1):
+        land(spark, src, b)
+        got.append(_stream_jobs(spark, run))
+    assert got == jobs
 
 
 def test_funnel_robots_gate_many_record_payloads_no_uid_collision(
