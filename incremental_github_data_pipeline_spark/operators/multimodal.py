@@ -4,10 +4,12 @@ opaque ``binary`` payloads + typed metadata structs.
 Decode is REAL for every format with a public, dependency-free codec:
 - ``image/bmp`` — 24-bit uncompressed BMP, parsed header-first with
   numpy (row padding, bottom-up raster, pixel-data offset honored);
-- ``image/jpeg`` — baseline sequential JPEG (ITU-T T.81): full
-  marker parse, canonical Huffman entropy decode, dequantize + IDCT,
-  grayscale and YCbCr 4:4:4 (see :func:`decode_jpeg` for the honest
-  scope boundary — progressive/subsampled variants raise);
+- ``image/jpeg`` — Huffman-coded JPEG (ITU-T T.81): baseline and
+  extended sequential (8/12-bit) and progressive scans, full marker
+  parse, canonical Huffman entropy decode, dequantize + IDCT,
+  grayscale and YCbCr with any integer chroma subsampling, restart
+  intervals (see :func:`decode_jpeg` for the scope boundary —
+  arithmetic-coded and lossless/hierarchical frames raise);
 - ``image/png`` — full PNG (RFC 2083): chunk walk with CRC verify,
   stdlib-``zlib`` inflate of the IDAT stream, per-row unfilter of all
   five filter types (None/Sub/Up/Average/Paeth), 8-bit grayscale and
@@ -32,11 +34,17 @@ not present in this container) keep the honest ``NotImplementedError``
 stub; ``fake=True`` substitutes a deterministic synthetic decode so the
 distributed plumbing is exercisable for those too.
 
-At 100 TB: binary payloads dominate row size, so (a) media tables are
-partitioned by a content-size bucket to keep Arrow batches bounded,
-(b) metadata-only queries never touch the binary column (parquet column
-pruning — confirm ``ReadSchema`` excludes it), and (c) decode stages run
-``mapInPandas`` with small ``maxRecordsPerBatch`` to cap executor memory.
+At 100 TB: binary payloads dominate row size, so (a) metadata-only
+queries never touch the binary column (parquet column pruning — confirm
+``ReadSchema`` excludes it), and (b) every per-row decode stage runs
+through one shell, :func:`_per_row_stage`: an optional mime/kind filter
+and one ``mapInPandas`` pass in which each input row yields its output
+tuples, so a worker holds one Arrow batch (Spark's default
+``spark.sql.execution.arrow.maxRecordsPerBatch`` — nothing here sets
+it) and one decoded payload at a time. The test fixtures size
+partitions by row count only (``_sized_media``: at least 8 rows per
+partition, at most 32 partitions); nothing here sizes them by payload
+bytes yet.
 """
 
 from __future__ import annotations
@@ -46,6 +54,7 @@ import struct
 import wave
 import zlib
 from collections.abc import Iterator
+from operator import itemgetter
 
 import numpy as np
 import pandas as pd
@@ -492,6 +501,30 @@ def make_wav_variant_media(spark, n: int = 24, id_offset: int = 1000) -> DataFra
 # Real decode stages (mapInPandas — Arrow-batched, schema-fixed)
 # ---------------------------------------------------------------------------
 
+
+def _per_row_stage(
+    media: DataFrame, schema: StructType, rows, where=None
+) -> DataFrame:
+    """The one ``mapInPandas`` call of every per-row stage: each Arrow
+    batch becomes one pandas frame of what ``rows(r)`` yields for each
+    input row ``r`` (an ``itertuples`` record) — tuples in ``schema``
+    order, zero or more per row. A batch with no output rows still
+    yields an empty frame with the schema's columns. ``where``, when
+    given, filters the input first (the stage's mime or kind gate)."""
+    names = schema.fieldNames()
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame(
+                [out for r in pdf.itertuples(index=False) for out in rows(r)],
+                columns=names,
+            )
+
+    if where is not None:
+        media = media.filter(where)
+    return media.mapInPandas(batches, schema)
+
+
 MEDIA_STATS_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -545,28 +578,16 @@ def decode_stats(media: DataFrame, on_error: str = "raise") -> DataFrame:
             OverflowError,
         )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for r in pdf.itertuples(index=False):
-                row = {
-                    "media_id": r.media_id, "kind": r.kind, "width": None,
-                    "height": None, "n_frames": None, "n_samples": None,
-                    "sample_rate": None, "duration_ms": None, "mean_r": None,
-                    "mean_g": None, "mean_b": None, "mean_abs_sample": None,
-                    "n_channels": None, "mean_ch0": None, "mean_ch1": None,
-                    "decode_error": None,
-                }
-                try:
-                    _decode_one(r, row)
-                except catch as exc:
-                    row["decode_error"] = (
-                        f"{type(exc).__name__}: {exc}"[:500]
-                    )
-                out.append(row)
-            yield pd.DataFrame(out)
+    def rows(r):
+        row = dict.fromkeys(MEDIA_STATS_SCHEMA.fieldNames())
+        row.update(media_id=r.media_id, kind=r.kind)
+        try:
+            _decode_one(r, row)
+        except catch as exc:
+            row["decode_error"] = f"{type(exc).__name__}: {exc}"[:500]
+        yield tuple(row.values())
 
-    return media.mapInPandas(batches, MEDIA_STATS_SCHEMA)
+    return _per_row_stage(media, MEDIA_STATS_SCHEMA, rows)
 
 
 def _decode_one(r, row: dict) -> None:
@@ -672,21 +693,16 @@ def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     (out_h, out_w) → re-encode BMP. Non-image rows pass through
     untouched. See :func:`area_resample` for the resampling contract."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for r in pdf.itertuples(index=False):
-                if r.mime == "image/bmp":
-                    small = area_resample(decode_bmp(r.payload), out_w, out_h)
-                    recs.append(
-                        (r.media_id, r.kind, encode_bmp(small), r.mime,
-                         out_w, out_h, r.duration_ms)
-                    )
-                else:
-                    recs.append(tuple(r))
-            yield pd.DataFrame(recs, columns=pdf.columns)
+    def rows(r):
+        if r.mime == "image/bmp":
+            small = area_resample(decode_bmp(r.payload), out_w, out_h)
+            yield (r.media_id, r.kind, encode_bmp(small), r.mime,
+                   out_w, out_h, r.duration_ms)
+        else:
+            yield (r.media_id, r.kind, r.payload, r.mime,
+                   r.width, r.height, r.duration_ms)
 
-    return media.mapInPandas(batches, MEDIA_SCHEMA)
+    return _per_row_stage(media, MEDIA_SCHEMA, rows)
 
 
 SAMPLED_FRAME_SCHEMA = StructType(
@@ -705,25 +721,17 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     Each video row expands independently inside its partition — no
     shuffle; at scale the payload column is the I/O bound, not compute."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for r in pdf.itertuples(index=False):
-                if r.mime != "video/x-raw-rgb":
-                    continue
-                frames, frame_ms = decode_rawvideo(r.payload)
-                duration = frames.shape[0] * frame_ms
-                for ts in range(0, duration, every_ms):
-                    idx = min(ts // frame_ms, frames.shape[0] - 1)
-                    recs.append(
-                        (r.media_id, ts, idx, float(frames[idx].mean()))
-                    )
-            yield pd.DataFrame(
-                recs, columns=["media_id", "ts_ms", "frame_idx", "frame_mean"]
-            )
+    def rows(r):
+        if r.mime != "video/x-raw-rgb":
+            return
+        frames, frame_ms = decode_rawvideo(r.payload)
+        duration = frames.shape[0] * frame_ms
+        for ts in range(0, duration, every_ms):
+            idx = min(ts // frame_ms, frames.shape[0] - 1)
+            yield (r.media_id, ts, idx, float(frames[idx].mean()))
 
-    return media.filter(F.col("kind") == "video").mapInPandas(
-        batches, SAMPLED_FRAME_SCHEMA
+    return _per_row_stage(
+        media, SAMPLED_FRAME_SCHEMA, rows, F.col("kind") == "video"
     )
 
 
@@ -755,47 +763,35 @@ def vad_segments(
     numbers inside its partition, payload I/O is the scale bound.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for r in pdf.itertuples(index=False):
-                if r.mime != "audio/wav":
-                    continue
-                _sr, s = decode_wav(r.payload)
-                s = downmix_mono(s)
-                nf = len(s) // frame_len
-                if nf == 0:
-                    recs.append((r.media_id, 0, 0, 0, 0))
-                    continue
-                e = (
-                    np.abs(s[: nf * frame_len].astype(np.int64))
-                    .reshape(nf, frame_len)
-                    .sum(axis=1)
-                )
-                voiced = e > threshold * frame_len
-                # run-length over the voiced mask
-                n_seg = longest = cur = 0
-                for v in voiced:
-                    if v:
-                        cur += 1
-                        if cur == 1:
-                            n_seg += 1
-                        longest = max(longest, cur)
-                    else:
-                        cur = 0
-                recs.append(
-                    (r.media_id, nf, int(voiced.sum()), n_seg, longest)
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "media_id", "n_frames", "n_voiced",
-                    "n_segments", "longest_segment",
-                ],
-            )
+    def rows(r):
+        if r.mime != "audio/wav":
+            return
+        _sr, s = decode_wav(r.payload)
+        s = downmix_mono(s)
+        nf = len(s) // frame_len
+        if nf == 0:
+            yield (r.media_id, 0, 0, 0, 0)
+            return
+        e = (
+            np.abs(s[: nf * frame_len].astype(np.int64))
+            .reshape(nf, frame_len)
+            .sum(axis=1)
+        )
+        voiced = e > threshold * frame_len
+        # run-length over the voiced mask
+        n_seg = longest = cur = 0
+        for v in voiced:
+            if v:
+                cur += 1
+                if cur == 1:
+                    n_seg += 1
+                longest = max(longest, cur)
+            else:
+                cur = 0
+        yield (r.media_id, nf, int(voiced.sum()), n_seg, longest)
 
-    return media.filter(F.col("kind") == "audio").mapInPandas(
-        batches, VAD_STATS_SCHEMA
+    return _per_row_stage(
+        media, VAD_STATS_SCHEMA, rows, F.col("kind") == "audio"
     )
 
 
@@ -826,44 +822,23 @@ def video_motion_stats(
     aggregation/ordering, payload I/O is the scale bound.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for r in pdf.itertuples(index=False):
-                if r.mime != "video/x-raw-rgb":
-                    continue
-                frames, _frame_ms = decode_rawvideo(r.payload)
-                n, h, w = frames.shape[:3]
-                if n < 2:
-                    recs.append((r.media_id, n, 0, 0, 0))
-                    continue
-                d = np.abs(
-                    frames[1:].astype(np.int64)
-                    - frames[:-1].astype(np.int64)
-                )
-                pair = d.sum(axis=(1, 2, 3))
-                cuts = int(
-                    (pair > cut_threshold * h * w * 3).sum()
-                )
-                recs.append(
-                    (
-                        r.media_id,
-                        n,
-                        int(pair.sum()),
-                        int(pair.max()),
-                        cuts,
-                    )
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "media_id", "n_frames", "total_abs_diff",
-                    "max_pair_diff", "n_cuts",
-                ],
-            )
+    def rows(r):
+        if r.mime != "video/x-raw-rgb":
+            return
+        frames, _frame_ms = decode_rawvideo(r.payload)
+        n, h, w = frames.shape[:3]
+        if n < 2:
+            yield (r.media_id, n, 0, 0, 0)
+            return
+        d = np.abs(
+            frames[1:].astype(np.int64) - frames[:-1].astype(np.int64)
+        )
+        pair = d.sum(axis=(1, 2, 3))
+        cuts = int((pair > cut_threshold * h * w * 3).sum())
+        yield (r.media_id, n, int(pair.sum()), int(pair.max()), cuts)
 
-    return media.filter(F.col("kind") == "video").mapInPandas(
-        batches, MOTION_STATS_SCHEMA
+    return _per_row_stage(
+        media, MOTION_STATS_SCHEMA, rows, F.col("kind") == "video"
     )
 
 
@@ -885,14 +860,16 @@ def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Baseline JPEG (ITU-T T.81 sequential DCT, dependency-free)
+# JPEG (ITU-T T.81 DCT with Huffman coding, dependency-free)
 #
 # A real JPEG codec pair built from the public spec: 8x8 block DCT,
 # uniform quantization, canonical Huffman entropy coding, JFIF markers.
-# Scope (honestly bounded): baseline sequential, 8-bit precision,
-# grayscale or YCbCr 4:4:4 (no chroma subsampling), no progressive
-# scans, no restart intervals — each unsupported feature raises
-# NotImplementedError at parse time rather than mis-decoding.
+# Encoders: baseline 4:4:4, 12-bit extended sequential, progressive,
+# and 4:2:0 with restart intervals. The decoder reads all of those;
+# arithmetic-coded and lossless/hierarchical frames raise
+# NotImplementedError at parse time rather than mis-decoding. Bit I/O
+# is the shared MSB-first _BitWriter/_BitReader; JPEG's own framing
+# (pad with 1-bits, 0xFF byte stuffing) lives in _jpeg_flush.
 # ---------------------------------------------------------------------------
 
 # zigzag scan order of the 64 coefficients (T.81 figure 5)
@@ -963,16 +940,26 @@ _AC_PROG_BITS = [0, 0, 0, 0, 0, 0, 0, len(_AC_PROG_SYMBOLS),
 _AC_PROG_VALS = sorted(_AC_PROG_SYMBOLS)
 
 
-def _huff_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
-    """Canonical Huffman assignment (T.81 C.2): symbol -> (length, code)."""
-    out, code, k = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[vals[k]] = (length, code)
-            code += 1
-            k += 1
-        code <<= 1
+def _canonical_codes(pairs) -> dict[int, tuple[int, int]]:
+    """Canonical prefix-code assignment (T.81 C.2, RFC 1951 §3.2.2)
+    over ``(symbol, length)`` pairs given in tie order: stable-sorted
+    by length, each code is the previous one plus one, shifted left
+    by each length step. Returns symbol -> (length, code)."""
+    out, code, prev = {}, 0, 0
+    for sym, length in sorted(pairs, key=itemgetter(1)):
+        code <<= length - prev
+        out[sym] = (length, code)
+        code += 1
+        prev = length
     return out
+
+
+def _huff_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
+    """JPEG DHT (``bits`` = code counts per length 1..16, ``vals`` in
+    DHT order) → symbol -> (length, code). ``vals`` of another length
+    than ``sum(bits)`` (a truncated DHT) raises ValueError."""
+    lengths = [n for n, count in enumerate(bits, 1) for _ in range(count)]
+    return _canonical_codes(zip(vals, lengths, strict=True))
 
 
 def _huff_decoder(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
@@ -980,7 +967,24 @@ def _huff_decoder(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int
     return {lc: sym for sym, lc in _huff_codes(bits, vals).items()}
 
 
+def _read_symbol(
+    br, table: dict[tuple[int, int], int], max_len: int = 16
+) -> int:
+    """Bit-by-bit canonical-code walk over ``br.read_bit()``: accumulate
+    bits MSB-first until ``(length, code)`` names a symbol of
+    ``table``. Also :meth:`_BitReader.read_symbol`."""
+    code = 0
+    for length in range(1, max_len + 1):
+        code = (code << 1) | br.read_bit()
+        sym = table.get((length, code))
+        if sym is not None:
+            return sym
+    raise ValueError("invalid prefix code")
+
+
 class _BitWriter:
+    """MSB-first bit writer (JPEG entropy segments, FLAC, TIFF LZW)."""
+
     def __init__(self) -> None:
         self.out = bytearray()
         self._acc = 0
@@ -990,30 +994,36 @@ class _BitWriter:
         self._acc = (self._acc << length) | (value & ((1 << length) - 1))
         self._n += length
         while self._n >= 8:
-            byte = (self._acc >> (self._n - 8)) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:  # byte stuffing
-                self.out.append(0x00)
+            self.out.append((self._acc >> (self._n - 8)) & 0xFF)
             self._n -= 8
         self._acc &= (1 << self._n) - 1
 
-    def flush(self) -> bytes:
+    def write_unary(self, q: int) -> None:
+        while q >= 32:
+            self.write(0, 32)
+            q -= 32
+        self.write(1, q + 1)  # q zeros then a one
+
+    def align(self, fill: int = 0) -> None:
+        """Pad to a byte boundary with ``fill`` (0 or 1) bits."""
         if self._n:
-            self.write((1 << (8 - self._n)) - 1, 8 - self._n)  # pad with 1s
-        return bytes(self.out)
+            self.write(-fill, 8 - self._n)
 
 
 class _BitReader:
-    def __init__(self, data: bytes) -> None:
+    """MSB-first bit reader with byte-offset tracking (FLAC's CRC
+    windows are byte slices of the payload)."""
+
+    def __init__(self, data: bytes, pos: int = 0) -> None:
         self.data = data
-        self.pos = 0
+        self.pos = pos  # next byte to load
         self._acc = 0
         self._n = 0
 
     def read_bit(self) -> int:
         if self._n == 0:
             if self.pos >= len(self.data):
-                raise ValueError("JPEG entropy stream truncated")
+                raise ValueError("bit stream truncated")
             self._acc = self.data[self.pos]
             self.pos += 1
             self._n = 8
@@ -1026,15 +1036,28 @@ class _BitReader:
             v = (v << 1) | self.read_bit()
         return v
 
-    def read_symbol(self, table: dict[tuple[int, int], int]) -> int:
-        code, length = 0, 0
-        while length < 16:
-            code = (code << 1) | self.read_bit()
-            length += 1
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code in JPEG stream")
+    def read_signed(self, n: int) -> int:
+        v = self.read_bits(n)
+        return v - (1 << n) if v >= (1 << (n - 1)) else v
+
+    def read_unary(self) -> int:
+        q = 0
+        while self.read_bit() == 0:
+            q += 1
+        return q
+
+    def align(self) -> None:
+        self._n = 0
+
+    read_symbol = _read_symbol
+
+
+def _jpeg_flush(bw: _BitWriter) -> bytes:
+    """Close one JPEG entropy-coded segment: pad with 1-bits, then
+    stuff a 0x00 after every 0xFF so no data byte reads as a marker
+    (T.81 F.1.2.3)."""
+    bw.align(1)
+    return bytes(bw.out).replace(b"\xff", b"\xff\x00")
 
 
 def _amplitude(value: int) -> tuple[int, int]:
@@ -1153,7 +1176,7 @@ def encode_jpeg(pixels: np.ndarray) -> bytes:
         sos += struct.pack(">BB", c + 1, 0x00)  # DC table 0, AC table 0
     sos += struct.pack(">BBB", 0, 63, 0)
     out += seg(0xDA, sos)
-    out += bw.flush()
+    out += _jpeg_flush(bw)
     out += b"\xff\xd9"  # EOI
     return bytes(out)
 
@@ -1228,7 +1251,7 @@ def encode_jpeg12(
     out += seg(0xC4, bytes([0x00]) + bytes(_DC12_BITS) + bytes(_DC12_VALS))
     out += seg(0xC4, bytes([0x10]) + bytes(_AC12_BITS) + bytes(_AC12_VALS))
     out += seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    out += bw.flush()
+    out += _jpeg_flush(bw)
     out += b"\xff\xd9"
     return bytes(out)
 
@@ -1274,7 +1297,7 @@ def _enc_dc_first(coefs, order, al, dc_codes) -> bytes:
         bw.write(code, length)
         if size:
             bw.write(bits, size)
-    return bw.flush()
+    return _jpeg_flush(bw)
 
 
 def _enc_dc_refine(coefs, order, al) -> bytes:
@@ -1282,7 +1305,7 @@ def _enc_dc_refine(coefs, order, al) -> bytes:
     bw = _BitWriter()
     for c, by, bx in order:
         bw.write((int(coefs[c][by, bx, 0]) >> al) & 1, 1)
-    return bw.flush()
+    return _jpeg_flush(bw)
 
 
 def _enc_ac_first(coef, blocks, ss, se, al, ac_codes) -> bytes:
@@ -1327,7 +1350,7 @@ def _enc_ac_first(coef, blocks, ss, se, al, ac_codes) -> bytes:
                 if eobrun == 0x7FFF:
                     emit_eobrun()
     emit_eobrun()
-    return bw.flush()
+    return _jpeg_flush(bw)
 
 
 def _enc_ac_refine(coef, blocks, ss, se, al, ac_codes) -> bytes:
@@ -1393,7 +1416,7 @@ def _enc_ac_refine(coef, blocks, ss, se, al, ac_codes) -> bytes:
                 if eobrun == 0x7FFF:
                     emit_eobrun()
     emit_eobrun()
-    return bw.flush()
+    return _jpeg_flush(bw)
 
 
 def encode_jpeg_progressive(
@@ -1583,7 +1606,7 @@ def encode_jpeg_420(pixels: np.ndarray, restart_interval: int = 0) -> bytes:
         (my, mx) for my in range(mcuy) for mx in range(mcux)
     ):
         if restart_interval and m and m % restart_interval == 0:
-            entropy += bw.flush()
+            entropy += _jpeg_flush(bw)
             entropy += bytes([0xFF, 0xD0 + rst])
             rst = (rst + 1) % 8
             bw = _BitWriter()
@@ -1594,7 +1617,7 @@ def encode_jpeg_420(pixels: np.ndarray, restart_interval: int = 0) -> bytes:
                     emit_block(
                         bw, coefs[c][my * vi + v, mx * hi + h_], pred, c
                     )
-    entropy += bw.flush()
+    entropy += _jpeg_flush(bw)
 
     def seg(marker: int, payload: bytes) -> bytes:
         return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
@@ -1736,8 +1759,9 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     H/V sampling factors — 4:2:0, 4:2:2, 4:1:1, ... — chroma planes
     upsample by sample replication) and restart intervals (RSTn
     markers byte-align the entropy stream and reset DC predictors and
-    EOB runs, per T.81 E.1.4). Rejects — with an honest error, never
-    a silent mis-decode — 12-bit precision and arithmetic coding.
+    EOB runs, per T.81 E.1.4). 12-bit precision decodes for SOF1/SOF2.
+    Rejects — with an honest error, never a silent mis-decode — 12-bit
+    SOF0, arithmetic coding and lossless/hierarchical frames.
 
     Marker state is PER SCAN: each SOS snapshots the DHT tables and
     DRI interval in effect at that point, and every scan decodes with
@@ -2184,35 +2208,17 @@ def jpeg_decode_stats(media: DataFrame) -> DataFrame:
     plus a block-position-weighted sum (catches block misplacement, not
     just wrong values). One Arrow-batched mapInPandas pass."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for r in pdf.itertuples(index=False):
-                px = decode_jpeg(r.payload).astype(np.int64)
-                h, w = px.shape[:2]
-                if px.ndim == 3:  # color: sum channels, weights stay 2D
-                    px = px.sum(axis=2)
-                wy = np.arange(h)[:, None] // 8 + 1
-                wx = np.arange(w)[None, :] // 8 + 1
-                recs.append(
-                    (
-                        r.media_id,
-                        w,
-                        h,
-                        int(px.sum()),
-                        int((px * wy * wx).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "media_id", "width", "height",
-                    "pixel_sum", "block_weighted_sum",
-                ],
-            )
+    def rows(r):
+        px = decode_jpeg(r.payload).astype(np.int64)
+        h, w = px.shape[:2]
+        if px.ndim == 3:  # color: sum channels, weights stay 2D
+            px = px.sum(axis=2)
+        wy = np.arange(h)[:, None] // 8 + 1
+        wx = np.arange(w)[None, :] // 8 + 1
+        yield (r.media_id, w, h, int(px.sum()), int((px * wy * wx).sum()))
 
-    return media.filter(F.col("mime") == "image/jpeg").mapInPandas(
-        batches, JPEG_STATS_SCHEMA
+    return _per_row_stage(
+        media, JPEG_STATS_SCHEMA, rows, F.col("mime") == "image/jpeg"
     )
 
 
@@ -2880,24 +2886,16 @@ def png_decode_stats(media: DataFrame) -> DataFrame:
     row-position-weighted sum (catches unfilter errors that happen to
     preserve totals). One Arrow-batched mapInPandas pass, no shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for r in pdf.itertuples(index=False):
-                px = decode_png(r.payload).astype(np.int64)
-                h, w = px.shape[:2]
-                ch = 1 if px.ndim == 2 else px.shape[2]
-                wy = np.arange(h) + 1
-                rw = (px.reshape(h, -1).sum(axis=1) * wy).sum()
-                recs.append((r.media_id, w, h, ch, int(px.sum()), int(rw)))
-            yield pd.DataFrame(
-                recs,
-                columns=["media_id", "width", "height", "channels",
-                         "pixel_sum", "row_weighted_sum"],
-            )
+    def rows(r):
+        px = decode_png(r.payload).astype(np.int64)
+        h, w = px.shape[:2]
+        ch = 1 if px.ndim == 2 else px.shape[2]
+        wy = np.arange(h) + 1
+        rw = (px.reshape(h, -1).sum(axis=1) * wy).sum()
+        yield (r.media_id, w, h, ch, int(px.sum()), int(rw))
 
-    return media.filter(F.col("mime") == "image/png").mapInPandas(
-        batches, PNG_STATS_SCHEMA
+    return _per_row_stage(
+        media, PNG_STATS_SCHEMA, rows, F.col("mime") == "image/png"
     )
 
 
@@ -2918,26 +2916,17 @@ def g711_decode_stats(media: DataFrame) -> DataFrame:
     statistics (sum of |pcm| and sum of positive pcm — the pair pins
     both magnitude and sign handling). One mapInPandas pass."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for r in pdf.itertuples(index=False):
-                sr, s = decode_wav_g711(r.payload)
-                law = "mulaw" if r.mime == "audio/basic" else "alaw"
-                x = s.astype(np.int64)
-                recs.append(
-                    (r.media_id, law, sr, len(s),
-                     int(np.abs(x).sum()), int(x[x > 0].sum()))
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=["media_id", "law", "sample_rate", "n_samples",
-                         "sum_abs", "sum_pos"],
-            )
+    def rows(r):
+        sr, s = decode_wav_g711(r.payload)
+        law = "mulaw" if r.mime == "audio/basic" else "alaw"
+        x = s.astype(np.int64)
+        yield (r.media_id, law, sr, len(s),
+               int(np.abs(x).sum()), int(x[x > 0].sum()))
 
-    return media.filter(
-        F.col("mime").isin("audio/basic", "audio/x-alaw-basic")
-    ).mapInPandas(batches, G711_STATS_SCHEMA)
+    return _per_row_stage(
+        media, G711_STATS_SCHEMA, rows,
+        F.col("mime").isin("audio/basic", "audio/x-alaw-basic"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3086,24 +3075,14 @@ def adpcm_decode_stats(media: DataFrame) -> DataFrame:
     wrong step anywhere shifts every subsequent predictor). One
     Arrow-batched mapInPandas pass."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for r in pdf.itertuples(index=False):
-                _, s = decode_wav_adpcm(r.payload)
-                x = s.astype(np.int64)
-                recs.append(
-                    (r.media_id, len(s), int(np.abs(x).sum()),
-                     int(x[x > 0].sum()), int(x[-1]))
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=["media_id", "n_samples", "sum_abs",
-                         "sum_pos", "last_sample"],
-            )
+    def rows(r):
+        _, s = decode_wav_adpcm(r.payload)
+        x = s.astype(np.int64)
+        yield (r.media_id, len(s), int(np.abs(x).sum()),
+               int(x[x > 0].sum()), int(x[-1]))
 
-    return media.filter(F.col("mime") == "audio/x-adpcm").mapInPandas(
-        batches, ADPCM_STATS_SCHEMA
+    return _per_row_stage(
+        media, ADPCM_STATS_SCHEMA, rows, F.col("mime") == "audio/x-adpcm"
     )
 
 
@@ -3581,33 +3560,23 @@ def gif_decode_stats(media: DataFrame) -> DataFrame:
     Single-frame GIFs get weight 1, so their channel lanes equal the
     plain sums. One Arrow-batched mapInPandas pass."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for r in pdf.itertuples(index=False):
-                frames = decode_gif_frames(r.payload)
-                h, w = frames[0][1].shape[:2]
-                sums = np.zeros(3, dtype=np.int64)
-                rw = 0
-                for fi, (_, px) in enumerate(frames):
-                    px = px.astype(np.int64)
-                    sums += (fi + 1) * px.sum(axis=(0, 1))
-                    wy = np.arange(h) + 1
-                    rw += (fi + 1) * int(
-                        (px.sum(axis=(1, 2)) * wy).sum()
-                    )
-                recs.append(
-                    (r.media_id, w, h, len(frames),
-                     int(sums[0]), int(sums[1]), int(sums[2]), rw)
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=["media_id", "width", "height", "n_frames",
-                         "sum_r", "sum_g", "sum_b", "row_weighted"],
+    def rows(r):
+        frames = decode_gif_frames(r.payload)
+        h, w = frames[0][1].shape[:2]
+        sums = np.zeros(3, dtype=np.int64)
+        rw = 0
+        for fi, (_, px) in enumerate(frames):
+            px = px.astype(np.int64)
+            sums += (fi + 1) * px.sum(axis=(0, 1))
+            wy = np.arange(h) + 1
+            rw += (fi + 1) * int(
+                (px.sum(axis=(1, 2)) * wy).sum()
             )
+        yield (r.media_id, w, h, len(frames),
+               int(sums[0]), int(sums[1]), int(sums[2]), rw)
 
-    return media.filter(F.col("mime") == "image/gif").mapInPandas(
-        batches, GIF_STATS_SCHEMA
+    return _per_row_stage(
+        media, GIF_STATS_SCHEMA, rows, F.col("mime") == "image/gif"
     )
 
 
@@ -3778,27 +3747,17 @@ def qoi_decode_stats(media: DataFrame) -> DataFrame:
     a decoder that scrambles runs or index hits while preserving value
     histograms fails it. One Arrow-batched mapInPandas pass."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for r in pdf.itertuples(index=False):
-                px = decode_qoi(r.payload).astype(np.int64)
-                h, w = px.shape[:2]
-                flat_r = px[:, :, 0].reshape(-1)
-                recs.append(
-                    (r.media_id, w, h,
-                     int(px[:, :, 0].sum()), int(px[:, :, 1].sum()),
-                     int(px[:, :, 2].sum()),
-                     int((np.arange(h * w, dtype=np.int64) * flat_r).sum()))
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=["media_id", "width", "height",
-                         "sum_r", "sum_g", "sum_b", "pos_r"],
-            )
+    def rows(r):
+        px = decode_qoi(r.payload).astype(np.int64)
+        h, w = px.shape[:2]
+        flat_r = px[:, :, 0].reshape(-1)
+        yield (r.media_id, w, h,
+               int(px[:, :, 0].sum()), int(px[:, :, 1].sum()),
+               int(px[:, :, 2].sum()),
+               int((np.arange(h * w, dtype=np.int64) * flat_r).sum()))
 
-    return media.filter(F.col("mime") == "image/qoi").mapInPandas(
-        batches, QOI_STATS_SCHEMA
+    return _per_row_stage(
+        media, QOI_STATS_SCHEMA, rows, F.col("mime") == "image/qoi"
     )
 
 
@@ -3869,18 +3828,14 @@ def media_ahash(media: DataFrame) -> DataFrame:
     one possibly-sign-wrapped int64, so the values compare exactly in
     any engine. One Arrow-batched mapInPandas pass."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for r in pdf.itertuples(index=False):
-                bits = ahash_bits(decode_qoi(r.payload))
-                lo = sum(bits[j] << j for j in range(32))
-                hi = sum(bits[32 + j] << j for j in range(32))
-                recs.append((r.media_id, hi, lo))
-            yield pd.DataFrame(recs, columns=["media_id", "hash_hi", "hash_lo"])
+    def rows(r):
+        bits = ahash_bits(decode_qoi(r.payload))
+        lo = sum(bits[j] << j for j in range(32))
+        hi = sum(bits[32 + j] << j for j in range(32))
+        yield (r.media_id, hi, lo)
 
-    return media.filter(F.col("mime") == "image/qoi").mapInPandas(
-        batches, AHASH_SCHEMA
+    return _per_row_stage(
+        media, AHASH_SCHEMA, rows, F.col("mime") == "image/qoi"
     )
 
 
@@ -3958,73 +3913,6 @@ def make_funnel_media(spark) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-class _FlacBitWriter:
-    """Plain MSB-first bit writer (no JPEG byte stuffing)."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self._acc = 0
-        self._n = 0
-
-    def write(self, value: int, length: int) -> None:
-        self._acc = (self._acc << length) | (value & ((1 << length) - 1))
-        self._n += length
-        while self._n >= 8:
-            self.out.append((self._acc >> (self._n - 8)) & 0xFF)
-            self._n -= 8
-        self._acc &= (1 << self._n) - 1
-
-    def write_unary(self, q: int) -> None:
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)  # q zeros then a one
-
-    def align(self) -> None:
-        if self._n:
-            self.write(0, 8 - self._n)
-
-
-class _FlacBitReader:
-    """Plain MSB-first bit reader with byte-offset tracking (CRC
-    windows are byte slices of the payload)."""
-
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self.data = data
-        self.pos = pos  # next byte to load
-        self._acc = 0
-        self._n = 0
-
-    def read_bit(self) -> int:
-        if self._n == 0:
-            if self.pos >= len(self.data):
-                raise ValueError("FLAC stream truncated")
-            self._acc = self.data[self.pos]
-            self.pos += 1
-            self._n = 8
-        self._n -= 1
-        return (self._acc >> self._n) & 1
-
-    def read_bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def read_signed(self, n: int) -> int:
-        v = self.read_bits(n)
-        return v - (1 << n) if v >= (1 << (n - 1)) else v
-
-    def read_unary(self) -> int:
-        q = 0
-        while self.read_bit() == 0:
-            q += 1
-        return q
-
-    def align(self) -> None:
-        self._n = 0
-
-
 def _crc8(data: bytes) -> int:
     """CRC-8, polynomial x^8 + x^2 + x + 1 (0x07), init 0 — the FLAC
     frame-header CRC."""
@@ -4068,7 +3956,7 @@ def _utf8_code(n: int) -> bytes:
     return bytes(out)
 
 
-def _utf8_decode(br: _FlacBitReader) -> int:
+def _utf8_decode(br: _BitReader) -> int:
     b0 = br.read_bits(8)
     if b0 < 0x80:
         return b0
@@ -4177,7 +4065,7 @@ def _lpc_residual(x: np.ndarray, q: list[int], shift: int) -> np.ndarray:
     return xi[order:] - pred
 
 
-def _write_rice_residual(w: _FlacBitWriter, res: np.ndarray, k: int) -> None:
+def _write_rice_residual(w: _BitWriter, res: np.ndarray, k: int) -> None:
     w.write(0b00, 2)  # rice method (4-bit params)
     w.write(0, 4)  # partition order 0
     w.write(k, 4)
@@ -4189,7 +4077,7 @@ def _write_rice_residual(w: _FlacBitWriter, res: np.ndarray, k: int) -> None:
 
 
 def _encode_flac_subframe(
-    w: _FlacBitWriter, x: np.ndarray, sub_bps: int, lpc_order: int
+    w: _BitWriter, x: np.ndarray, sub_bps: int, lpc_order: int
 ) -> None:
     """One subframe at ``sub_bps`` bits (17 for a side channel): best
     of CONSTANT / FIXED(0..4) / LPC(``lpc_order``, when > 0) by exact
@@ -4313,7 +4201,7 @@ def encode_flac(
     md5 = hashlib.md5(s.tobytes()).digest()  # interleaved LE per spec
 
     out = bytearray(b"fLaC")
-    info = _FlacBitWriter()
+    info = _BitWriter()
     info.write(1, 1)  # last metadata block
     info.write(0, 7)  # STREAMINFO
     info.write(34, 24)
@@ -4367,7 +4255,7 @@ def encode_flac(
             else:  # mid_side
                 mid = (left + right) >> 1
                 ch_asgn, subframes = 0b1010, [(mid, 16), (side, 17)]
-        w = _FlacBitWriter()
+        w = _BitWriter()
         w.write(0b11111111111110, 14)
         w.write(0, 1)  # reserved
         w.write(0, 1)  # fixed blocksize strategy
@@ -4413,7 +4301,7 @@ def decode_flac(payload: bytes) -> tuple[int, np.ndarray]:
         blen = int.from_bytes(payload[pos + 1 : pos + 4], "big")
         body = payload[pos + 4 : pos + 4 + blen]
         if btype == 0:
-            br = _FlacBitReader(body)
+            br = _BitReader(body)
             br.read_bits(16), br.read_bits(16)
             br.read_bits(24), br.read_bits(24)
             sample_rate = br.read_bits(20)
@@ -4430,7 +4318,7 @@ def decode_flac(payload: bytes) -> tuple[int, np.ndarray]:
     filled = 0
     while filled < total:
         frame_start = pos
-        br = _FlacBitReader(payload, pos)
+        br = _BitReader(payload, pos)
         if br.read_bits(14) != 0b11111111111110:
             raise ValueError("lost FLAC frame sync")
         br.read_bit()
@@ -5359,9 +5247,11 @@ def _tiff_lzw_encode(data: bytes) -> bytes:
     9→12 bits, ClearCode 256 / EOI 257, and the TIFF "EarlyChange"
     convention — the code width bumps one code EARLIER than the table
     size alone would require. Plain string-table encoder; the table
-    resets at 4094 entries per the spec."""
+    resets at 4094 entries per the spec. Kept apart from the GIF
+    :func:`_lzw_compress`, which packs codes LSB-first and widens one
+    code later (giflib's rule)."""
     CLEAR, EOI = 256, 257
-    out = _FlacBitWriter()  # plain MSB-first writer (no byte stuffing)
+    out = _BitWriter()
     table = {bytes([i]): i for i in range(256)}
     next_code, width = 258, 9
     out.write(CLEAR, width)
@@ -5391,7 +5281,7 @@ def _tiff_lzw_encode(data: bytes) -> bytes:
 
 def _tiff_lzw_decode(data: bytes, expected: int) -> bytes:
     CLEAR, EOI = 256, 257
-    br = _FlacBitReader(data)
+    br = _BitReader(data)
     out = bytearray()
     table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
     width = 9
@@ -6209,6 +6099,13 @@ def make_legacy_media(spark, n: int = 24, id_offset: int = 4000) -> DataFrame:
     return _sized_media(spark, rows)
 
 
+# the audio inputs transcode_audio and resample_audio decode
+_TRANSCODE_DECODERS = {
+    "audio/wav": decode_wav,
+    "audio/flac": decode_flac,
+    "audio/aiff": decode_aiff,
+}
+
 TRANSCODE_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -6237,11 +6134,6 @@ def transcode_audio(media: DataFrame, to: str = "audio/flac") -> DataFrame:
     ratios queryable. 8-bit WAV input arrives on the int16 lattice
     (decode_wav upscales), so round-tripping back to 8-bit is not
     attempted: normalization targets are 16-bit containers."""
-    decoders = {
-        "audio/wav": decode_wav,
-        "audio/flac": decode_flac,
-        "audio/aiff": decode_aiff,
-    }
     if to == "audio/flac":
         # real-encoder defaults: LPC order 12 (the flac -8 tier, r11)
         # + per-frame auto stereo decorrelation — the oracle over the
@@ -6257,27 +6149,15 @@ def transcode_audio(media: DataFrame, to: str = "audio/flac") -> DataFrame:
     else:
         raise ValueError(f"unsupported transcode target {to!r}")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for r in pdf.itertuples(index=False):
-                if r.mime not in decoders:
-                    continue
-                sr, s = decoders[r.mime](r.payload)
-                new = enc(s, sr)
-                out.append(
-                    (r.media_id, new, to, len(r.payload), len(new))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "payload", "mime",
-                    "n_bytes_in", "n_bytes_out",
-                ],
-            )
+    def rows(r):
+        if r.mime not in _TRANSCODE_DECODERS:
+            return
+        sr, s = _TRANSCODE_DECODERS[r.mime](r.payload)
+        new = enc(s, sr)
+        yield (r.media_id, new, to, len(r.payload), len(new))
 
-    return media.filter(F.col("kind") == "audio").mapInPandas(
-        batches, TRANSCODE_SCHEMA
+    return _per_row_stage(
+        media, TRANSCODE_SCHEMA, rows, F.col("kind") == "audio"
     )
 
 
@@ -6294,17 +6174,19 @@ def transcode_audio(media: DataFrame, to: str = "audio/flac") -> DataFrame:
 # cache, LZ77 backward references with the 120-entry distance
 # neighborhood map, simple + normal prefix codes (code-length codes
 # with 16/17/18 repeats and the max_symbol short form), and meta
-# prefix-code partitioning. The ALPH chunk fails loud; lossy VP8
-# keyframes decode via the r14 RFC 6386 pipeline further down this
-# module. The encoder emits the same feature set (minus
-# animation) so every decode path is exercised by oracle-certified
-# fixtures; single-symbol prefix codes use the trivial zero-bit form
-# on both sides, matching libwebp's trivial-code special case.
+# prefix-code partitioning. The ALPH chunk and lossy VP8 keyframes
+# decode via the r14 pipelines further down this module. The encoder
+# emits the same feature set (minus animation) so every decode path
+# is exercised by oracle-certified fixtures; single-symbol prefix
+# codes use the trivial zero-bit form on both sides, matching
+# libwebp's trivial-code special case.
 # ---------------------------------------------------------------------------
 
 
 class _Vp8lReader:
-    """LSB-first bit reader (VP8L convention, opposite of FLAC/JPEG)."""
+    """LSB-first bit reader (VP8L convention, opposite of FLAC/JPEG).
+    Kept apart from :class:`_BitReader`: one reader for both orders
+    would test the order on every bit of the hot decode loop."""
 
     def __init__(self, data: bytes) -> None:
         self.data = data
@@ -6382,20 +6264,6 @@ def _vp8l_huff_lengths(freqs: dict[int, int], limit: int) -> dict[int, int]:
     return out
 
 
-def _vp8l_canonical(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
-    """DEFLATE-style canonical code assignment: shorter codes first,
-    ties by symbol. Returns {symbol: (code, length)}."""
-    items = sorted((l, s) for s, l in lengths.items() if l > 0)
-    codes: dict[int, tuple[int, int]] = {}
-    code, prev = 0, 0
-    for l, s in items:
-        code <<= l - prev
-        codes[s] = (code, l)
-        code += 1
-        prev = l
-    return codes
-
-
 class _Vp8lHuff:
     """Prefix-code decoder: bit-by-bit walk over the canonical map
     (codes are transmitted reversed, so MSB-first accumulation against
@@ -6413,8 +6281,8 @@ class _Vp8lHuff:
             raise ValueError("empty VP8L prefix code")
         if len(nz) == 1:
             return cls({}, next(iter(nz)))
-        codes = _vp8l_canonical(nz)
-        return cls({(l, c): s for s, (c, l) in codes.items()}, None)
+        codes = _canonical_codes(sorted(nz.items()))
+        return cls({lc: s for s, lc in codes.items()}, None)
 
     @classmethod
     def from_simple(cls, symbols: list[int]) -> "_Vp8lHuff":
@@ -6426,13 +6294,7 @@ class _Vp8lHuff:
     def read(self, br: _Vp8lReader) -> int:
         if self.single is not None:
             return self.single
-        code = 0
-        for l in range(1, 16):
-            code = (code << 1) | br.read_bit()
-            s = self.map.get((l, code))
-            if s is not None:
-                return s
-        raise ValueError("invalid VP8L prefix code")
+        return _read_symbol(br, self.map, 15)
 
 
 # the spec's 120-entry distance→(dx, dy) neighborhood map: short
@@ -6997,7 +6859,7 @@ def decode_webp_frames(payload: bytes) -> list[tuple[int, np.ndarray]]:
 
 
 class _Vp8lEncCode:
-    """Encoder-side prefix code: holds per-symbol (code, length) and
+    """Encoder-side prefix code: holds per-symbol (length, code) and
     the header-writing recipe (simple vs code-length-coded)."""
 
     def __init__(self, freqs: dict[int, int]) -> None:
@@ -7009,14 +6871,13 @@ class _Vp8lEncCode:
             self.codes = (
                 {syms[0]: (0, 0)}
                 if len(syms) == 1
-                else {syms[0]: (0, 1), syms[1]: (1, 1)}
+                else {syms[0]: (1, 0), syms[1]: (1, 1)}
             )
             self.syms = syms
         else:
             lengths = _vp8l_huff_lengths(freqs, 15)
-            self.codes = _vp8l_canonical(lengths)
-            if len(lengths) == 1:  # trivial: zero bits per symbol
-                self.codes = {next(iter(lengths)): (0, 0)}
+            # a lone symbol has length 0: the trivial zero-bit code
+            self.codes = _canonical_codes(sorted(lengths.items()))
             self.lengths = lengths
 
     def write_header(self, wtr: _Vp8lWriter, alphabet: int) -> None:
@@ -7073,7 +6934,7 @@ class _Vp8lEncCode:
             cl_lengths = {next(iter(cl_lengths)): 1}
             cl_codes = {next(iter(cl_lengths)): (0, 0)}
         else:
-            cl_codes = _vp8l_canonical(cl_lengths)
+            cl_codes = _canonical_codes(sorted(cl_lengths.items()))
         # kCodeLengthCodeOrder — must mirror the reader (r14 fix: 16
         # after 5, the RFC 9649 order)
         order = [
@@ -7088,13 +6949,13 @@ class _Vp8lEncCode:
             wtr.write(cl_lengths.get(order[i], 0), 3)
         wtr.write(0, 1)  # no explicit max_symbol
         for s, nbits, extra in toks:
-            c, l = cl_codes[s]
+            l, c = cl_codes[s]
             wtr.write_code(c, l)
             if nbits:
                 wtr.write(extra, nbits)
 
     def write_symbol(self, wtr: _Vp8lWriter, sym: int) -> None:
-        c, l = self.codes[sym]
+        l, c = self.codes[sym]
         if l:
             wtr.write_code(c, l)
 
@@ -7613,33 +7474,23 @@ def webp_decode_stats(media: DataFrame) -> DataFrame:
     reports 4 when the first composite carries transparency. One
     Arrow-batched mapInPandas pass, no shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for r in pdf.itertuples(index=False):
-                frames = decode_webp_frames(r.payload)
-                h, w = frames[0][1].shape[:2]
-                ch = 4 if np.any(frames[0][1][:, :, 3] != 255) else 3
-                total = 0
-                rw = 0
-                wy = np.arange(h) + 1
-                for fi, (_, px) in enumerate(frames):
-                    rgb = px[:, :, :3].astype(np.int64)
-                    total += (fi + 1) * int(rgb.sum())
-                    rw += (fi + 1) * int(
-                        (rgb.reshape(h, -1).sum(axis=1) * wy).sum()
-                    )
-                recs.append(
-                    (r.media_id, w, h, ch, len(frames), total, rw)
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=["media_id", "width", "height", "channels",
-                         "n_frames", "pixel_sum", "row_weighted_sum"],
+    def rows(r):
+        frames = decode_webp_frames(r.payload)
+        h, w = frames[0][1].shape[:2]
+        ch = 4 if np.any(frames[0][1][:, :, 3] != 255) else 3
+        total = 0
+        rw = 0
+        wy = np.arange(h) + 1
+        for fi, (_, px) in enumerate(frames):
+            rgb = px[:, :, :3].astype(np.int64)
+            total += (fi + 1) * int(rgb.sum())
+            rw += (fi + 1) * int(
+                (rgb.reshape(h, -1).sum(axis=1) * wy).sum()
             )
+        yield (r.media_id, w, h, ch, len(frames), total, rw)
 
-    return media.filter(F.col("mime") == "image/webp").mapInPandas(
-        batches, WEBP_STATS_SCHEMA
+    return _per_row_stage(
+        media, WEBP_STATS_SCHEMA, rows, F.col("mime") == "image/webp"
     )
 
 
@@ -7694,35 +7545,18 @@ def resample_audio(media: DataFrame, target_rate: int) -> DataFrame:
     payload, mime, n_bytes_in, n_bytes_out) — the transcode_audio
     contract, so the decode-stats oracle over the OUTPUT certifies the
     whole decode → resample → encode chain end-to-end."""
-    decoders = {
-        "audio/wav": decode_wav,
-        "audio/flac": decode_flac,
-        "audio/aiff": decode_aiff,
-    }
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for r in pdf.itertuples(index=False):
-                if r.mime not in decoders:
-                    continue
-                sr, s = decoders[r.mime](r.payload)
-                new = encode_wav(
-                    resample_linear_fixed(s, sr, target_rate), target_rate
-                )
-                out.append(
-                    (r.media_id, new, "audio/wav", len(r.payload), len(new))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "payload", "mime",
-                    "n_bytes_in", "n_bytes_out",
-                ],
-            )
+    def rows(r):
+        if r.mime not in _TRANSCODE_DECODERS:
+            return
+        sr, s = _TRANSCODE_DECODERS[r.mime](r.payload)
+        new = encode_wav(
+            resample_linear_fixed(s, sr, target_rate), target_rate
+        )
+        yield (r.media_id, new, "audio/wav", len(r.payload), len(new))
 
-    return media.filter(F.col("kind") == "audio").mapInPandas(
-        batches, TRANSCODE_SCHEMA
+    return _per_row_stage(
+        media, TRANSCODE_SCHEMA, rows, F.col("kind") == "audio"
     )
 
 
@@ -7790,34 +7624,23 @@ def augment_decode_stats(media: DataFrame, ops=AUGMENT_OPS) -> DataFrame:
     }
     ops = list(ops)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for r in pdf.itertuples(index=False):
-                if r.mime not in decoders:
-                    continue
-                px = decoders[r.mime](r.payload)
-                op = ops[r.media_id % len(ops)]
-                out = augment_image(px, op).astype(np.int64)
-                hh, ww = out.shape[:2]
-                wy = np.arange(hh) + 1
-                wx = np.arange(ww) + 1
-                flat = out.reshape(hh, ww, -1)
-                rw = (flat.sum(axis=(1, 2)) * wy).sum()
-                cw = (flat.sum(axis=(0, 2)) * wx).sum()
-                recs.append(
-                    (r.media_id, op, ww, hh, int(out.sum()),
-                     int(rw), int(cw))
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=["media_id", "op", "width", "height",
-                         "pixel_sum", "row_weighted_sum",
-                         "col_weighted_sum"],
-            )
+    def rows(r):
+        if r.mime not in decoders:
+            return
+        px = decoders[r.mime](r.payload)
+        op = ops[r.media_id % len(ops)]
+        out = augment_image(px, op).astype(np.int64)
+        hh, ww = out.shape[:2]
+        wy = np.arange(hh) + 1
+        wx = np.arange(ww) + 1
+        flat = out.reshape(hh, ww, -1)
+        rw = (flat.sum(axis=(1, 2)) * wy).sum()
+        cw = (flat.sum(axis=(0, 2)) * wx).sum()
+        yield (r.media_id, op, ww, hh, int(out.sum()),
+               int(rw), int(cw))
 
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        batches, AUGMENT_STATS_SCHEMA
+    return _per_row_stage(
+        media, AUGMENT_STATS_SCHEMA, rows, F.col("kind") == "image"
     )
 
 
@@ -7986,26 +7809,16 @@ def avi_decode_stats(media: DataFrame) -> DataFrame:
     decoded out of order, which a total alone cannot). One
     Arrow-batched mapInPandas pass."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for r in pdf.itertuples(index=False):
-                fr, fms = decode_avi_mjpeg(r.payload)
-                x = fr.astype(np.int64)
-                per = x.reshape(x.shape[0], -1).sum(axis=1)
-                wk = np.arange(x.shape[0]) + 1
-                recs.append(
-                    (r.media_id, x.shape[0], x.shape[2], x.shape[1], fms,
-                     int(per.sum()), int((per * wk).sum()))
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=["media_id", "n_frames", "width", "height",
-                         "frame_ms", "pixel_sum", "frame_weighted_sum"],
-            )
+    def rows(r):
+        fr, fms = decode_avi_mjpeg(r.payload)
+        x = fr.astype(np.int64)
+        per = x.reshape(x.shape[0], -1).sum(axis=1)
+        wk = np.arange(x.shape[0]) + 1
+        yield (r.media_id, x.shape[0], x.shape[2], x.shape[1], fms,
+               int(per.sum()), int((per * wk).sum()))
 
-    return media.filter(F.col("mime") == "video/x-msvideo").mapInPandas(
-        batches, AVI_STATS_SCHEMA
+    return _per_row_stage(
+        media, AVI_STATS_SCHEMA, rows, F.col("mime") == "video/x-msvideo"
     )
 
 
@@ -9847,34 +9660,18 @@ def vp8_decode_stats(media: DataFrame) -> DataFrame:
     One Arrow-batched mapInPandas pass; payload I/O is the scale
     bound, as with every codec stage."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for r in pdf.itertuples(index=False):
-                y, u, v = decode_vp8_keyframe(r.payload)
-                h, w = y.shape
-                wy = np.arange(h, dtype=np.int64) // 16 + 1
-                wx = np.arange(w, dtype=np.int64) // 16 + 1
-                yl = y.astype(np.int64)
-                recs.append(
-                    (
-                        r.media_id, w, h,
-                        int(yl.sum()),
-                        int(u.astype(np.int64).sum()),
-                        int(v.astype(np.int64).sum()),
-                        int((yl * wy[:, None] * wx[None, :]).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "media_id", "width", "height",
-                    "y_sum", "u_sum", "v_sum", "mb_weighted_y_sum",
-                ],
-            )
+    def rows(r):
+        y, u, v = decode_vp8_keyframe(r.payload)
+        h, w = y.shape
+        wy = np.arange(h, dtype=np.int64) // 16 + 1
+        wx = np.arange(w, dtype=np.int64) // 16 + 1
+        yl = y.astype(np.int64)
+        yield (r.media_id, w, h, int(yl.sum()),
+               int(u.astype(np.int64).sum()), int(v.astype(np.int64).sum()),
+               int((yl * wy[:, None] * wx[None, :]).sum()))
 
-    return media.filter(F.col("mime") == "image/webp").mapInPandas(
-        batches, VP8_STATS_SCHEMA
+    return _per_row_stage(
+        media, VP8_STATS_SCHEMA, rows, F.col("mime") == "image/webp"
     )
 
 
@@ -9939,36 +9736,19 @@ def wav_depth_stats(media: DataFrame) -> DataFrame:
     sum over all channels plus per-channel sums (``sum_ch1`` NULL for
     mono). One Arrow-batched mapInPandas pass."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for r in pdf.itertuples(index=False):
-                sr, s = decode_wav(r.payload)
-                s64 = s.astype(np.int64)
-                if s64.ndim == 1:
-                    recs.append(
-                        (r.media_id, sr, len(s64), 1,
-                         int(np.abs(s64).sum()), int(s64.sum()), None)
-                    )
-                else:
-                    recs.append(
-                        (
-                            r.media_id, sr, s64.shape[0], s64.shape[1],
-                            int(np.abs(s64).sum()),
-                            int(s64[:, 0].sum()),
-                            int(s64[:, 1].sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "media_id", "sample_rate", "n_frames", "n_channels",
-                    "sum_abs", "sum_ch0", "sum_ch1",
-                ],
-            )
+    def rows(r):
+        sr, s = decode_wav(r.payload)
+        s64 = s.astype(np.int64)
+        if s64.ndim == 1:
+            yield (r.media_id, sr, len(s64), 1,
+                   int(np.abs(s64).sum()), int(s64.sum()), None)
+        else:
+            yield (r.media_id, sr, s64.shape[0], s64.shape[1],
+                   int(np.abs(s64).sum()),
+                   int(s64[:, 0].sum()), int(s64[:, 1].sum()))
 
-    return media.filter(F.col("mime") == "audio/wav").mapInPandas(
-        batches, WAV_DEPTH_STATS_SCHEMA
+    return _per_row_stage(
+        media, WAV_DEPTH_STATS_SCHEMA, rows, F.col("mime") == "audio/wav"
     )
 
 
@@ -10201,37 +9981,21 @@ def webp_alpha_stats(media: DataFrame) -> DataFrame:
     row-weighted alpha sum (catches a misapplied prediction filter,
     not just wrong totals). One Arrow-batched mapInPandas pass."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for r in pdf.itertuples(index=False):
-                px = decode_webp_lossless(r.payload)
-                h, w, ch = px.shape
-                rgb = px[:, :, :3].astype(np.int64)
-                a = (
-                    px[:, :, 3].astype(np.int64)
-                    if ch == 4
-                    else np.full((h, w), 255, dtype=np.int64)
-                )
-                wy = np.arange(h, dtype=np.int64) + 1
-                recs.append(
-                    (
-                        r.media_id, w, h, ch,
-                        int(rgb.sum()),
-                        int(a.sum()),
-                        int((a.sum(axis=1) * wy).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "media_id", "width", "height", "channels",
-                    "rgb_sum", "alpha_sum", "alpha_row_weighted_sum",
-                ],
-            )
+    def rows(r):
+        px = decode_webp_lossless(r.payload)
+        h, w, ch = px.shape
+        rgb = px[:, :, :3].astype(np.int64)
+        a = (
+            px[:, :, 3].astype(np.int64)
+            if ch == 4
+            else np.full((h, w), 255, dtype=np.int64)
+        )
+        wy = np.arange(h, dtype=np.int64) + 1
+        yield (r.media_id, w, h, ch, int(rgb.sum()), int(a.sum()),
+               int((a.sum(axis=1) * wy).sum()))
 
-    return media.filter(F.col("mime") == "image/webp").mapInPandas(
-        batches, WEBP_ALPHA_STATS_SCHEMA
+    return _per_row_stage(
+        media, WEBP_ALPHA_STATS_SCHEMA, rows, F.col("mime") == "image/webp"
     )
 
 

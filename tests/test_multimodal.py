@@ -1404,7 +1404,7 @@ class TestFlac:
         ]:
             code = mm._utf8_code(n)
             assert len(code) == want_len, (hex(n), code.hex())
-            br = mm._FlacBitReader(code)
+            br = mm._BitReader(code)
             assert mm._utf8_decode(br) == n
 
     def test_corruption_detected_by_crc(self):
@@ -2899,3 +2899,112 @@ def test_vp8l_uniform_alphabet_header():
     for kw in (dict(), dict(lz77=False), dict(cache_bits=4)):
         p = mm.encode_webp_lossless(px, **kw)
         assert np.array_equal(mm.decode_webp_lossless(p), px), kw
+
+
+# Every per-row decode stage: (stage, declared schema, an input it
+# accepts, an input whose rows it filters out — None for the two stages
+# that do not filter: decode_stats raises on an unknown mime and
+# resize_images passes non-BMP rows through).
+_PER_ROW_STAGES = {
+    "decode_stats": (
+        mm.decode_stats, mm.MEDIA_STATS_SCHEMA, mm.make_real_media, None,
+    ),
+    "resize_images": (
+        lambda m: mm.resize_images(m, 4, 4), mm.MEDIA_SCHEMA,
+        mm.make_real_media, None,
+    ),
+    "sample_frames": (
+        mm.sample_frames, mm.SAMPLED_FRAME_SCHEMA, mm.make_real_media,
+        mm.make_png_media,
+    ),
+    "vad_segments": (
+        mm.vad_segments, mm.VAD_STATS_SCHEMA, mm.make_real_media,
+        mm.make_png_media,
+    ),
+    "video_motion_stats": (
+        mm.video_motion_stats, mm.MOTION_STATS_SCHEMA, mm.make_real_media,
+        mm.make_png_media,
+    ),
+    "jpeg_decode_stats": (
+        mm.jpeg_decode_stats, mm.JPEG_STATS_SCHEMA, mm.make_jpeg_media,
+        mm.make_adpcm_media,
+    ),
+    "png_decode_stats": (
+        mm.png_decode_stats, mm.PNG_STATS_SCHEMA, mm.make_png_media,
+        mm.make_adpcm_media,
+    ),
+    "g711_decode_stats": (
+        mm.g711_decode_stats, mm.G711_STATS_SCHEMA, mm.make_g711_media,
+        mm.make_png_media,
+    ),
+    "adpcm_decode_stats": (
+        mm.adpcm_decode_stats, mm.ADPCM_STATS_SCHEMA, mm.make_adpcm_media,
+        mm.make_png_media,
+    ),
+    "gif_decode_stats": (
+        mm.gif_decode_stats, mm.GIF_STATS_SCHEMA,
+        lambda s, n: mm.make_gif_media(s, n, anim=1), mm.make_adpcm_media,
+    ),
+    "qoi_decode_stats": (
+        mm.qoi_decode_stats, mm.QOI_STATS_SCHEMA, mm.make_qoi_media,
+        mm.make_adpcm_media,
+    ),
+    "webp_decode_stats": (
+        mm.webp_decode_stats, mm.WEBP_STATS_SCHEMA,
+        lambda s, n: mm.make_webp_media(s, n, anim=1), mm.make_adpcm_media,
+    ),
+    "avi_decode_stats": (
+        mm.avi_decode_stats, mm.AVI_STATS_SCHEMA, mm.make_avi_media,
+        mm.make_png_media,
+    ),
+    "vp8_decode_stats": (
+        mm.vp8_decode_stats, mm.VP8_STATS_SCHEMA, mm.make_vp8_media,
+        mm.make_adpcm_media,
+    ),
+    "media_ahash": (
+        mm.media_ahash, mm.AHASH_SCHEMA,
+        lambda s, n: mm.make_ahash_media(s, n, n_pairs=1),
+        mm.make_adpcm_media,
+    ),
+    "transcode_audio": (
+        mm.transcode_audio, mm.TRANSCODE_SCHEMA, mm.make_wav_variant_media,
+        mm.make_png_media,
+    ),
+    "resample_audio": (
+        lambda m: mm.resample_audio(m, 4000), mm.TRANSCODE_SCHEMA,
+        mm.make_wav_variant_media, mm.make_png_media,
+    ),
+    "augment_decode_stats": (
+        mm.augment_decode_stats, mm.AUGMENT_STATS_SCHEMA,
+        mm.make_png_media, mm.make_adpcm_media,
+    ),
+    "wav_depth_stats": (
+        mm.wav_depth_stats, mm.WAV_DEPTH_STATS_SCHEMA,
+        mm.make_wav_depth_media, mm.make_png_media,
+    ),
+    "webp_alpha_stats": (
+        mm.webp_alpha_stats, mm.WEBP_ALPHA_STATS_SCHEMA,
+        mm.make_webp_alpha_media, mm.make_adpcm_media,
+    ),
+}
+
+
+def test_truncated_dht_raises_valueerror():
+    """A DHT whose symbol list is shorter than its code counts is a
+    format-driven miss, so decode_stats' quarantine mode catches it."""
+    with pytest.raises(ValueError):
+        mm._huff_codes(mm._AC_BITS, mm._AC_VALS[:-1])
+
+
+@pytest.mark.parametrize("name", sorted(_PER_ROW_STAGES))
+def test_per_row_stage_contract(spark, name):
+    """Each per-row stage declares its schema, runs as exactly one
+    MapInPandas, and an input of another format yields 0 rows."""
+    stage, schema, accepted, rejected = _PER_ROW_STAGES[name]
+    df = stage(accepted(spark, 3))
+    assert df.schema == schema
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    if rejected is not None:
+        assert stage(rejected(spark, 3)).collect() == []

@@ -2708,6 +2708,31 @@ _REPLAY_KEYS = _land_rows(
 _REPLAY_BEST_DOCS = "doc_id long, text string, q long"
 
 
+def _land_gz(spark, src, b):
+    """One gzip shard per batch, one member per document."""
+    import gzip
+
+    src.mkdir(exist_ok=True)
+    (src / f"b{b}.gz").write_bytes(
+        b"".join(
+            gzip.compress(_replay_text(i).encode(), mtime=0)
+            for i in range(20 * b, 20 * b + 20)
+        )
+    )
+
+
+def _replay_days(schema, rows):
+    """Rows of ``rows(day, i)`` over days 2024-01-01 + (i % 3), with
+    batch 2 landing late rows for batch 1's days."""
+    import datetime as dt
+
+    day = lambda i: dt.date(2024, 1, 1) + dt.timedelta(days=i % 3)  # noqa: E731
+    return _land_rows(
+        schema,
+        [[rows(day(i), i) for i in range(30)], [rows(day(i), i) for i in range(20, 50)]],
+    )
+
+
 def _keep_best_ingest(spark, src, root, ckpt):
     """Keep-best over a fixed CC labeling, {1, 2, 3, 4, 11} and
     {7, 8, 12}: batch 2's docs 11 and 12 join components batch 1 has
@@ -2810,7 +2835,60 @@ def _replay_lanes():
             st.run_incremental_cdc_ingest,
             {"ledger": "cdc-ledger:{ckpt}:{b}", "chunk_state": "cdc-state:{ckpt}:{b}"},
         ),
+        # single-commit append lanes: the replayed batch's one commit
+        # must no-op on its txn token
+        "text": (
+            _land_gz,
+            st.run_incremental_text_ingest,
+            {"": "text-ingest:{ckpt}:{b}"},
+        ),
+        "drift": (
+            _replay_days(
+                "win date, payload string",
+                lambda d, i: (d, json.dumps({f"k{i % 4}": i, f"k{i % 7}": 1})),
+            ),
+            st.run_incremental_drift_ingest,
+            {"": "drift-ingest:{ckpt}:{b}"},
+        ),
+        "tcloseness": (
+            _land_rows(
+                "seg string, v int",
+                [[("ab"[i % 2], i % 5) for i in range(30)],
+                 [("abc"[i % 3], i % 4) for i in range(30)]],
+            ),
+            lambda spark, src, root, ckpt: st.run_incremental_tcloseness_ingest(
+                spark, src, root, ckpt, "seg string, v int", ["seg"], "v"
+            ),
+            {"": "tclose-ingest:{ckpt}:{b}"},
+        ),
+        "volume": (
+            _replay_days("day date, event_id long", lambda d, i: (d, i)),
+            lambda spark, src, root, ckpt: st.run_incremental_volume_ingest(
+                spark, src, root, ckpt, "day date, event_id long", "day"
+            ),
+            {"": "volume-ingest:{ckpt}:{b}"},
+        ),
+        "profile": (
+            _land_rows(
+                "cat string, n long",
+                [[("xyz"[i % 3], i % 6) for i in range(30)],
+                 [("xw"[i % 2], i % 8) for i in range(30)]],
+            ),
+            lambda spark, src, root, ckpt: st.run_incremental_profile_ingest(
+                spark, src, root, ckpt, "cat string, n long", ["cat", "n"]
+            ),
+            {"": "profile-ingest:{ckpt}:{b}"},
+        ),
     }
+
+
+def _shard_names(df):
+    """The text lane records each shard's absolute path, and the runs
+    compared land their shards in different directories: keep the
+    file name."""
+    if "shard" not in df.columns:
+        return df
+    return df.withColumn("shard", F.regexp_extract("shard", "[^/]+$", 0))
 
 
 def _run_two_batches(spark, lane, base, crash_batch2=None):
@@ -2849,7 +2927,11 @@ def _replay_clean(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize(
-    "lane", ["index", "ann", "hll", "kmv", "cc", "keep_best", "lsh", "bloom", "cdc"]
+    "lane",
+    [
+        "index", "ann", "hll", "kmv", "cc", "keep_best", "lsh", "bloom", "cdc",
+        "text", "drift", "tcloseness", "volume", "profile",
+    ],
 )
 def test_versioned_ingest_crash_after_commit_replays_exactly_once(
     spark, tmp_path, lane, _replay_clean
@@ -2870,8 +2952,10 @@ def test_versioned_ingest_crash_after_commit_replays_exactly_once(
     assert len(calls) == 1
     want_root = _replay_clean(lane)
     for table, token in _replay_lanes()[lane][2].items():
-        got = versioned.read_version(spark, f"{root}/{table}")
-        want = versioned.read_version(spark, f"{want_root}/{table}")
+        got, want = (
+            _shard_names(versioned.read_version(spark, f"{r}/{table}"))
+            for r in (root, want_root)
+        )
         assert got.count() == want.count(), table
         assert got.exceptAll(want).isEmpty(), table
         assert want.exceptAll(got).isEmpty(), table
