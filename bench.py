@@ -23,12 +23,31 @@ cleanup backlog reaching stage id ~1468), not code regressions. A
 bounded session lifetime caps that pressure so round-over-round
 numbers compare queries, not suite sizes. Session setup happens
 OUTSIDE the timed region; query order stays pinned to this list.
+
+Usage::
+
+    python bench.py                    # every BENCH_QUERIES + EXTRA_LANES row
+    python bench.py [LANE ...] [--jobs] [--noop] [--plans DIR]
+    python bench.py --diff OLD.json NEW.json
+
+A LANE is a registry query or an ``EXTRA_LANES`` name; named lanes run
+through the same sessions and timing loop as the default list. The
+modes only ADD keys to the line: ``--jobs`` adds ``job_counts``
+``{lane: [jobs, stages, tasks]}`` from one profiled pass; ``--noop``
+adds ``noop`` ``{query: sec}``, the same warm-up + median-of-3 into the
+noop sink, which computes every column where count() lets the
+optimizer prune them; ``--plans DIR`` writes each registry query's
+``explain("formatted")`` to ``DIR/<query>.txt``, the only file the
+harness writes. ``--diff`` compares two recorded lines (shared rows,
+raw and probe-normalized sum ratios, top movers) and starts no Spark.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import shutil
 import statistics
 import sys
 import time
@@ -768,20 +787,26 @@ _BENCH_TMP: list[str] = []
 PROBE_REF_SEC = 0.44
 
 
-def _calibration_probe(spark) -> float:
-    def one() -> float:
+def _median_pass(action) -> float:
+    """One warm-up pass (JIT/codegen/caches/file listing), then the
+    MEDIAN of three timed passes, in seconds."""
+    action()
+    passes = []
+    for _ in range(3):
         t0 = time.time()
-        (
-            spark.range(0, 8_000_000, 1, 32)
-            .selectExpr("id % 9973 AS k", "id AS v")
-            .groupBy("k")
-            .agg({"v": "sum"})
-            .count()
-        )
-        return time.time() - t0
+        action()
+        passes.append(time.time() - t0)
+    return round(statistics.median(passes), 3)
 
-    one()  # warm-up (codegen)
-    return round(statistics.median([one() for _ in range(3)]), 3)
+
+def _calibration_probe(spark) -> float:
+    return _median_pass(
+        lambda: spark.range(0, 8_000_000, 1, 32)
+        .selectExpr("id % 9973 AS k", "id AS v")
+        .groupBy("k")
+        .agg({"v": "sum"})
+        .count()
+    )
 
 
 RECYCLE_EVERY = 8  # queries per SparkSession lifetime
@@ -810,63 +835,116 @@ def _profile_action(spark, name: str, action) -> list[int]:
     return [len(jobs), n_stages, n_tasks]
 
 
+def _diff(old_path: str, new_path: str) -> None:
+    """Print the comparison of two recorded bench lines over their
+    shared rows: sums, the median per-row ratio, the probe-normalized
+    sum ratio and the top raw movers."""
+    with open(old_path) as fh:
+        old = json.load(fh)
+    with open(new_path) as fh:
+        new = json.load(fh)
+    qo, qn = old["queries"], new["queries"]
+    shared = sorted(k for k in qn if k in qo)
+    so, sn = sum(qo[k] for k in shared), sum(qn[k] for k in shared)
+    ratios = sorted(qn[k] / qo[k] for k in shared)
+    med = ratios[len(ratios) // 2]
+    print(f"shared rows: {len(shared)}")
+    print(f"sum: {so:.2f} -> {sn:.2f}  ({sn/so:.3f}x raw)")
+    print(f"per-row median ratio: {med:.3f}")
+    print(f"probe: {old.get('probe_sec')} (ratio {old.get('probe_ratio')})"
+          f" -> {new.get('probe_sec')} (ratio {new.get('probe_ratio')})")
+    pr = (new.get("probe_sec") or 1) / (old.get("probe_sec") or 1)
+    print(f"probe-normalized sum ratio: {(sn/so)/pr:.3f}")
+    print("\ntop improvements (raw):")
+    movers = sorted(shared, key=lambda k: qn[k] - qo[k])
+    for k in movers[:20]:
+        print(f"  {qo[k]:7.3f} -> {qn[k]:7.3f} ({qn[k]/qo[k]:.2f}x)  {k}")
+    print("\ntop regressions (raw):")
+    for k in movers[-12:]:
+        print(f"  {qo[k]:7.3f} -> {qn[k]:7.3f} ({qn[k]/qo[k]:.2f}x)  {k}")
+
+
 def main() -> None:
-    # r16 (VERDICT r15 task 10): optional --jobs mode adds one profiled
-    # pass per query and a "job_counts" {name: [jobs, stages, tasks]}
-    # key to the JSON line. The driver never passes it: default output
-    # and timing methodology are byte-compatible with r15.
-    jobs_mode = "--jobs" in sys.argv[1:]
+    ap = argparse.ArgumentParser(
+        description="Headline-lane wall-clock harness; prints one JSON line."
+    )
+    ap.add_argument(
+        "lanes", nargs="*", metavar="LANE",
+        help="registry queries or EXTRA_LANES names (default: all rows)",
+    )
+    ap.add_argument("--jobs", action="store_true",
+                    help="add job_counts {lane: [jobs, stages, tasks]}")
+    ap.add_argument("--noop", action="store_true",
+                    help="add noop-sink medians for registry queries")
+    ap.add_argument("--plans", metavar="DIR",
+                    help="write explain('formatted') to DIR/<query>.txt")
+    ap.add_argument("--diff", nargs=2, metavar=("OLD", "NEW"),
+                    help="compare two recorded lines; runs nothing")
+    args = ap.parse_args()
+    if args.diff:
+        _diff(*args.diff)
+        return
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from incremental_github_data_pipeline_spark.queries import load_all
     from incremental_github_data_pipeline_spark.session import get_spark
 
     registry = load_all()
+    extras = {name: (setup, run) for name, setup, run in EXTRA_LANES}
+    unknown = [n for n in args.lanes if n not in registry and n not in extras]
+    if unknown:
+        ap.error(f"unknown lane(s): {' '.join(unknown)}")
+    names = args.lanes or BENCH_QUERIES + list(extras)
+    queries = [n for n in names if n in registry]
+    # Registry queries run in sessions of RECYCLE_EVERY, then every
+    # extra lane in one more session (setups such as the shared search
+    # indexes outlive a single lane).
+    sessions = [
+        (f"bench-g{i // RECYCLE_EVERY}", queries[i : i + RECYCLE_EVERY])
+        for i in range(0, len(queries), RECYCLE_EVERY)
+    ] + [("bench-extras", [n for n in names if n in extras])]
 
     spark = get_spark(app_name="bench-probe")
     spark.sparkContext.setLogLevel("ERROR")
     probe_sec = _calibration_probe(spark)
     spark.stop()
-    spark = None
 
+    if args.plans:
+        os.makedirs(args.plans, exist_ok=True)
     timings: dict[str, float] = {}
     job_counts: dict[str, list[int]] = {}
-    for i, name in enumerate(BENCH_QUERIES):
-        if i % RECYCLE_EVERY == 0:
-            if spark is not None:
-                spark.stop()
-            spark = get_spark(app_name=f"bench-g{i // RECYCLE_EVERY}")
-            spark.sparkContext.setLogLevel("ERROR")
-        fn = registry[name].fn
-        fn(spark, sf_dir).count()  # warm-up (codegen + file listing)
-        passes = []
-        for _ in range(3):
-            t0 = time.time()
-            fn(spark, sf_dir).count()
-            passes.append(time.time() - t0)
-        timings[name] = round(statistics.median(passes), 3)
-        if jobs_mode:
-            job_counts[name] = _profile_action(
-                spark, name, lambda: fn(spark, sf_dir).count()
-            )
-
-    import shutil
-
-    spark.stop()
-    spark = get_spark(app_name="bench-extras")
-    spark.sparkContext.setLogLevel("ERROR")
-    for name, setup, run in EXTRA_LANES:
-        state = setup(spark, sf_dir)  # untimed
-        run(spark, state)  # warm-up
-        passes = []
-        for _ in range(3):
-            t0 = time.time()
-            run(spark, state)
-            passes.append(time.time() - t0)
-        timings[name] = round(statistics.median(passes), 3)
-        if jobs_mode:
-            job_counts[name] = _profile_action(
-                spark, name, lambda: run(spark, state)
-            )
+    noop: dict[str, float] = {}
+    for app_name, group in sessions:
+        if not group:
+            continue
+        spark = get_spark(app_name=app_name)
+        spark.sparkContext.setLogLevel("ERROR")
+        for name in group:
+            if name in registry:
+                fn = registry[name].fn
+                action = lambda: fn(spark, sf_dir).count()  # noqa: E731
+            else:
+                setup, run = extras[name]
+                state = setup(spark, sf_dir)  # untimed
+                action = lambda: run(spark, state)  # noqa: E731
+            timings[name] = _median_pass(action)
+            if args.jobs:
+                job_counts[name] = _profile_action(spark, name, action)
+            if name not in registry:
+                continue
+            if args.noop:
+                noop[name] = _median_pass(
+                    lambda: fn(spark, sf_dir)
+                    .write.format("noop").mode("overwrite").save()
+                )
+            if args.plans:
+                modes = spark._jvm.org.apache.spark.sql.execution.ExplainMode
+                plan = fn(spark, sf_dir)._jdf.queryExecution().explainString(
+                    modes.fromString("formatted")
+                )
+                with open(os.path.join(args.plans, f"{name}.txt"), "w") as fh:
+                    fh.write(plan)
+        spark.stop()
     for tmp in _BENCH_TMP:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -893,10 +971,11 @@ def main() -> None:
             round(probe_sec / PROBE_REF_SEC, 3) if PROBE_REF_SEC else None
         ),
     }
-    if jobs_mode:
+    if args.jobs:
         record["job_counts"] = job_counts
+    if args.noop:
+        record["noop"] = noop
     print(json.dumps(record, separators=(",", ":")))
-    spark.stop()
 
 
 if __name__ == "__main__":

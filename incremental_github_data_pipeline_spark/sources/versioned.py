@@ -52,6 +52,7 @@ horizon (one batch, in practice) — the same contract as Delta's
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import time
@@ -128,6 +129,16 @@ def _files_and_stats(manifest: dict) -> tuple[list[str], dict]:
     return files, stats
 
 
+def _dir_stats(stats: dict, data_dir: str) -> dict:
+    """The stats entries of one committed data dir: stats are keyed by
+    part-file URI, so a dir owns every key under its path."""
+    return {
+        p: b
+        for p, b in stats.items()
+        if p.removeprefix("file://").startswith(data_dir)
+    }
+
+
 def manifest_entries(
     spark: SparkSession, root: str | Path, version: int | None = None
 ) -> DataFrame:
@@ -147,19 +158,7 @@ def manifest_entries(
     if "parts" in manifest:
         return spark.read.json(manifest["parts"]).select("dir", "stats_json")
     files, stats = _files_and_stats(manifest)
-    rows = [
-        (
-            f,
-            json.dumps(
-                {
-                    p: b
-                    for p, b in stats.items()
-                    if p.removeprefix("file://").startswith(f)
-                }
-            ),
-        )
-        for f in files
-    ]
+    rows = [(f, json.dumps(_dir_stats(stats, f))) for f in files]
     return local_rows_df(spark, rows, "dir string, stats_json string")
 
 
@@ -337,16 +336,7 @@ def commit_version(
         entries = [{"dir": str(data_dir), "stats_json": json.dumps(stats)}]
         if prev_parts is None:
             entries = [
-                {
-                    "dir": f,
-                    "stats_json": json.dumps(
-                        {
-                            p: b
-                            for p, b in prev_stats.items()
-                            if p.removeprefix("file://").startswith(f)
-                        }
-                    ),
-                }
+                {"dir": f, "stats_json": json.dumps(_dir_stats(prev_stats, f))}
                 for f in prev_files
             ] + entries
         _parts_dir(root).mkdir(parents=True, exist_ok=True)
@@ -404,86 +394,60 @@ def read_version(
     files, stats = _files_and_stats(manifest)
     if skip is not None and skip_values is not None:
         raise ValueError("pass skip or skip_values, not both")
-    if skip_values is not None:
-        col, vals = skip_values
-        vals = sorted(set(vals))
-        if not vals:
-            return _read_files(spark, manifest, files).filter(F.lit(False))
-
-        def part_survives(bounds) -> bool:
-            if bounds[0] is None or bounds[1] is None:
-                return True  # no range info → conservatively kept
-            import bisect
-
-            # any value in [min, max]? (vals sorted: one bisect)
-            i = bisect.bisect_left(vals, bounds[0])
-            return i < len(vals) and vals[i] <= bounds[1]
-
-        pruned = []
-        for f in files:
-            parts = [
-                (p, b)
-                for p, b in stats.items()
-                if p.removeprefix("file://").startswith(f)
-            ]
-            if not parts:
-                pruned.append(f)
-                continue
-            pruned.extend(
-                p for p, b in parts if col not in b or part_survives(b[col])
-            )
-        if not pruned:
-            return _read_files(spark, manifest, files).filter(F.lit(False))
-        return _read_files(spark, manifest, pruned).filter(
-            F.col(col).isin(vals)
-        )
+    if skip is None and skip_values is None:
+        return _read_files(spark, manifest, files)
+    candidates = files
     if skip is not None:
         col, lo, hi = skip
-
-        def part_survives(bounds) -> bool:
-            # A [null, null] bound (column entirely NULL in that part)
-            # carries no range information — treat it as no stats, so
-            # the part is conservatively kept, never a TypeError.
-            if bounds[0] is None or bounds[1] is None:
-                return True
-            return (lo is None or bounds[1] >= lo) and (
-                hi is None or bounds[0] <= hi
-            )
-
-        # Prune at PART-file granularity: stats keys are per-part URIs
-        # (input_file_name), so a compacted single-dir table whose
-        # parts were range-clustered still skips — dir-level pruning
-        # would aggregate the dir's bounds back to the full range and
-        # read everything. Dirs with no recorded stats are kept whole.
-        pruned = []
-        for f in files:
-            parts = [
-                (p, b)
-                for p, b in stats.items()
-                if p.removeprefix("file://").startswith(f)
-            ]
-            if not parts:
-                pruned.append(f)  # no usable stats → cannot skip
-                continue
-            pruned.extend(
-                p
-                for p, b in parts
-                if col not in b or part_survives(b[col])
-            )
-        if not pruned:
-            # schema-stable empty result: route through the same
-            # projection as non-empty reads, or a post-evolution empty
-            # read could surface a different (single-file-sampled)
-            # schema and break downstream unions
-            return _read_files(spark, manifest, files).filter(F.lit(False))
-        df = _read_files(spark, manifest, pruned)
-        c = F.col(col)
-        if lo is not None:
-            df = df.filter(c >= F.lit(lo))
+        conds = [F.col(col) >= F.lit(lo)] if lo is not None else []
         if hi is not None:
-            df = df.filter(c <= F.lit(hi))
-        return df
-    return _read_files(spark, manifest, files)
+            conds.append(F.col(col) <= F.lit(hi))
+
+        def overlaps(bmin, bmax) -> bool:
+            return (lo is None or bmax >= lo) and (hi is None or bmin <= hi)
+
+    else:
+        col, vals = skip_values
+        vals = sorted(set(vals))
+        conds = [F.col(col).isin(vals)]
+        if not vals:
+            candidates = []  # an empty IN-list matches no file
+
+        def overlaps(bmin, bmax) -> bool:
+            # any value in [min, max]? (vals sorted: one bisect)
+            i = bisect.bisect_left(vals, bmin)
+            return i < len(vals) and vals[i] <= bmax
+
+    def survives(bounds) -> bool:
+        # A [null, null] bound (column entirely NULL in that part)
+        # carries no range information — treat it as no stats, so the
+        # part is conservatively kept, never a TypeError.
+        return bounds[0] is None or bounds[1] is None or overlaps(*bounds)
+
+    # Prune at PART-file granularity: stats keys are per-part URIs
+    # (input_file_name), so a compacted single-dir table whose parts
+    # were range-clustered still skips — dir-level pruning would
+    # aggregate the dir's bounds back to the full range and read
+    # everything. Dirs with no recorded stats are kept whole.
+    pruned = []
+    for f in candidates:
+        parts = _dir_stats(stats, f)
+        if not parts:
+            pruned.append(f)  # no usable stats → cannot skip
+            continue
+        pruned.extend(
+            p for p, b in parts.items() if col not in b or survives(b[col])
+        )
+    if not pruned:
+        # schema-stable empty result: route through the same projection
+        # as non-empty reads, or a post-evolution empty read could
+        # surface a different (single-file-sampled) schema and break
+        # downstream unions
+        return _read_files(spark, manifest, files).filter(F.lit(False))
+    df = _read_files(spark, manifest, pruned)
+    for cond in conds:
+        df = df.filter(cond)
+    return df
 
 
 def _read_files(spark: SparkSession, manifest: dict, files: list) -> DataFrame:

@@ -14,6 +14,8 @@ tests fail before any benchmark notices.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from incremental_github_data_pipeline_spark.queries import load_all
@@ -346,7 +348,7 @@ def test_plan_audit_covers_registry(registry):
     drift at 165/167)."""
     import re
 
-    with open("/root/repo/PLANS.md") as fh:
+    with open(Path(__file__).resolve().parents[1] / "PLANS.md") as fh:
         text = fh.read()
     rows = {
         m.group(1)

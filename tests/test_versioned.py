@@ -296,9 +296,15 @@ def test_manifest_metadata_at_10k_files(spark, tmp_path):
     assert pruned.count() == 31
 
 
-def test_skip_keeps_files_with_all_null_stats(spark, tmp_path):
+@pytest.mark.parametrize(
+    "prune",
+    [{"skip": ("id", 0, 100)}, {"skip_values": ("id", list(range(101)))}],
+    ids=["skip", "skip_values"],
+)
+def test_skip_keeps_files_with_all_null_stats(spark, tmp_path, prune):
     """ADVICE r4: a [null, null] bound (stats column entirely NULL in a
-    file) must be treated as no-stats — file kept, not a TypeError."""
+    file) must be treated as no-stats — file kept, not a TypeError —
+    under range and IN-list pruning alike."""
     from pyspark.sql import functions as F
 
     root = tmp_path / "t"
@@ -312,14 +318,20 @@ def test_skip_keeps_files_with_all_null_stats(spark, tmp_path):
         ).repartition(1),
         root, mode="append", stats_cols=["id"],
     )
-    got = read_version(spark, root, skip=("id", 0, 100))
+    got = read_version(spark, root, **prune)
     assert got.count() == 10  # null-id rows excluded by predicate only
     assert len(got.inputFiles()) >= 1  # and no crash resolving stats
 
 
-def test_all_pruned_read_keeps_evolved_schema(spark, tmp_path):
+@pytest.mark.parametrize(
+    "prune",
+    [{"skip": ("id", 5000, 6000)}, {"skip_values": ("id", [5000, 6000])}],
+    ids=["skip", "skip_values"],
+)
+def test_all_pruned_read_keeps_evolved_schema(spark, tmp_path, prune):
     """ADVICE r4: the everything-pruned empty result must carry the
-    manifest's recorded (evolved) schema, same as non-empty reads."""
+    manifest's recorded (evolved) schema, same as non-empty reads,
+    under range and IN-list pruning alike."""
     root = tmp_path / "t"
     commit_version(
         _df(spark, [(1, "a")]).repartition(1), root, stats_cols=["id"]
@@ -330,7 +342,7 @@ def test_all_pruned_read_keeps_evolved_schema(spark, tmp_path):
     commit_version(
         widened.repartition(1), root, mode="append", stats_cols=["id"]
     )
-    empty = read_version(spark, root, skip=("id", 5000, 6000))
+    empty = read_version(spark, root, **prune)
     assert empty.count() == 0
     assert empty.columns == ["id", "val", "score"]
     assert empty.schema == read_version(spark, root).schema
