@@ -1,6 +1,7 @@
 """Operator surface of SURVEY.md §2.
 
-``core``        projections, filters, casts, dedup, FK-resolve, unions (§2.2-2.6)
+``core``        projections, filters, casts, dedup, FK-resolve, unions (§2.2-2.6),
+                and ``per_row_stage``, the one per-row Arrow (mapInPandas) stage
 ``dedup``       [EXT] exact / MinHash-LSH / SimHash / n-gram-Jaccard / embedding dedup
 ``similarity``  [EXT] brute-force and LSH-bucketed top-k vector search
 ``text``        [EXT] language-ID, quality scoring, token counting, fingerprinting

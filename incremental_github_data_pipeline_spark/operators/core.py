@@ -5,6 +5,8 @@ Everything here is declarative — each function only *extends the logical
 plan*; Catalyst handles pruning/pushdown/join strategy. No collects, no
 driver-side loops: every operator is a constant-depth plan transformation
 regardless of data size, so the same code runs at sf0.001 and at 100 TB.
+The one stage that runs Python per row, :func:`per_row_stage`, is the
+shell every payload decoder, chunker and per-row tokenizer pass shares.
 
 Reference citations are /root/reference/<file>:<lines>.
 """
@@ -15,6 +17,7 @@ from collections.abc import Iterable, Mapping
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 SEQ_COL = "_seq"
 
@@ -50,6 +53,47 @@ def ensure_min_partitions(df: DataFrame, min_partitions: int | None = None) -> D
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def per_row_stage(
+    df: DataFrame, schema: StructType, rows, where=None, on_error: str = "raise"
+) -> DataFrame:
+    """The one ``mapInPandas`` call of every per-row stage (payload
+    decoders, chunkers, tokenizer passes): each Arrow batch becomes one
+    pandas frame of what ``rows(r)`` yields for each input row ``r`` (an
+    ``itertuples`` record) — tuples in ``schema`` order, zero or more
+    per row. A batch with no output rows still yields an empty frame
+    with the schema's columns. ``where``, when given, filters the input
+    first (a stage's mime or kind gate).
+
+    ``on_error="raise"`` fails the job on the first bad row;
+    ``"skip"`` drops every input row whose ``rows`` raises
+    ``ValueError`` (``UnicodeDecodeError`` included). A row's outputs
+    are collected in full before any is kept, so a payload that fails
+    on its third member drops whole — never its first two members
+    alone. Skipped ids can be recovered with a ``left_anti`` join."""
+    if on_error not in ("raise", "skip"):
+        raise ValueError("on_error must be 'raise' or 'skip'")
+    names = schema.fieldNames()
+
+    def batches(it):
+        import pandas as pd
+
+        for pdf in it:
+            out = []
+            for r in pdf.itertuples(index=False):
+                try:
+                    got = list(rows(r))
+                except ValueError:
+                    if on_error == "raise":
+                        raise
+                    continue
+                out += got
+            yield pd.DataFrame(out, columns=names)
+
+    if where is not None:
+        df = df.filter(where)
+    return df.mapInPandas(batches, schema)
 
 
 def with_input_seq(df: DataFrame, seq_col: str = SEQ_COL) -> DataFrame:

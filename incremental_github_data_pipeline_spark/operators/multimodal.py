@@ -37,14 +37,16 @@ distributed plumbing is exercisable for those too.
 At 100 TB: binary payloads dominate row size, so (a) metadata-only
 queries never touch the binary column (parquet column pruning — confirm
 ``ReadSchema`` excludes it), and (b) every per-row decode stage runs
-through one shell, :func:`_per_row_stage`: an optional mime/kind filter
-and one ``mapInPandas`` pass in which each input row yields its output
-tuples, so a worker holds one Arrow batch (Spark's default
-``spark.sql.execution.arrow.maxRecordsPerBatch`` — nothing here sets
-it) and one decoded payload at a time. The test fixtures size
-partitions by row count only (``_sized_media``: at least 8 rows per
-partition, at most 32 partitions); nothing here sizes them by payload
-bytes yet.
+through the engine's one per-row shell,
+:func:`~incremental_github_data_pipeline_spark.operators.core.per_row_stage`
+(shared with the text, archive, Avro and parquet-footer readers): an
+optional mime/kind filter and one ``mapInPandas`` pass in which each
+input row yields its output tuples, so a worker holds one Arrow batch
+(Spark's default ``spark.sql.execution.arrow.maxRecordsPerBatch`` —
+nothing here sets it) and one decoded payload at a time. The test
+fixtures size partitions by row count only (``_sized_media``: at least
+8 rows per partition, at most 32 partitions); nothing here sizes them by
+payload bytes yet.
 """
 
 from __future__ import annotations
@@ -70,6 +72,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from incremental_github_data_pipeline_spark.operators.core import per_row_stage
 
 MEDIA_SCHEMA = StructType(
     [
@@ -502,29 +506,6 @@ def make_wav_variant_media(spark, n: int = 24, id_offset: int = 1000) -> DataFra
 # ---------------------------------------------------------------------------
 
 
-def _per_row_stage(
-    media: DataFrame, schema: StructType, rows, where=None
-) -> DataFrame:
-    """The one ``mapInPandas`` call of every per-row stage: each Arrow
-    batch becomes one pandas frame of what ``rows(r)`` yields for each
-    input row ``r`` (an ``itertuples`` record) — tuples in ``schema``
-    order, zero or more per row. A batch with no output rows still
-    yields an empty frame with the schema's columns. ``where``, when
-    given, filters the input first (the stage's mime or kind gate)."""
-    names = schema.fieldNames()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                [out for r in pdf.itertuples(index=False) for out in rows(r)],
-                columns=names,
-            )
-
-    if where is not None:
-        media = media.filter(where)
-    return media.mapInPandas(batches, schema)
-
-
 MEDIA_STATS_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -587,7 +568,7 @@ def decode_stats(media: DataFrame, on_error: str = "raise") -> DataFrame:
             row["decode_error"] = f"{type(exc).__name__}: {exc}"[:500]
         yield tuple(row.values())
 
-    return _per_row_stage(media, MEDIA_STATS_SCHEMA, rows)
+    return per_row_stage(media, MEDIA_STATS_SCHEMA, rows)
 
 
 def _decode_one(r, row: dict) -> None:
@@ -702,7 +683,7 @@ def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
             yield (r.media_id, r.kind, r.payload, r.mime,
                    r.width, r.height, r.duration_ms)
 
-    return _per_row_stage(media, MEDIA_SCHEMA, rows)
+    return per_row_stage(media, MEDIA_SCHEMA, rows)
 
 
 SAMPLED_FRAME_SCHEMA = StructType(
@@ -730,7 +711,7 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
             idx = min(ts // frame_ms, frames.shape[0] - 1)
             yield (r.media_id, ts, idx, float(frames[idx].mean()))
 
-    return _per_row_stage(
+    return per_row_stage(
         media, SAMPLED_FRAME_SCHEMA, rows, F.col("kind") == "video"
     )
 
@@ -790,7 +771,7 @@ def vad_segments(
                 cur = 0
         yield (r.media_id, nf, int(voiced.sum()), n_seg, longest)
 
-    return _per_row_stage(
+    return per_row_stage(
         media, VAD_STATS_SCHEMA, rows, F.col("kind") == "audio"
     )
 
@@ -837,7 +818,7 @@ def video_motion_stats(
         cuts = int((pair > cut_threshold * h * w * 3).sum())
         yield (r.media_id, n, int(pair.sum()), int(pair.max()), cuts)
 
-    return _per_row_stage(
+    return per_row_stage(
         media, MOTION_STATS_SCHEMA, rows, F.col("kind") == "video"
     )
 
@@ -2217,7 +2198,7 @@ def jpeg_decode_stats(media: DataFrame) -> DataFrame:
         wx = np.arange(w)[None, :] // 8 + 1
         yield (r.media_id, w, h, int(px.sum()), int((px * wy * wx).sum()))
 
-    return _per_row_stage(
+    return per_row_stage(
         media, JPEG_STATS_SCHEMA, rows, F.col("mime") == "image/jpeg"
     )
 
@@ -2881,21 +2862,26 @@ PNG_STATS_SCHEMA = StructType(
 )
 
 
+def pixel_sum_row(media_id: int, px: np.ndarray) -> tuple:
+    """One decoded image (``(h, w)`` or ``(h, w, c)``) → its
+    :data:`PNG_STATS_SCHEMA` row: exact integer pixel sum plus a
+    row-position-weighted sum (catches unfilter or entry-selection
+    errors that happen to preserve totals)."""
+    px = px.astype(np.int64)
+    h, w = px.shape[:2]
+    ch = 1 if px.ndim == 2 else px.shape[2]
+    wy = np.arange(h) + 1
+    rw = (px.reshape(h, -1).sum(axis=1) * wy).sum()
+    return (media_id, w, h, ch, int(px.sum()), int(rw))
+
+
 def png_decode_stats(media: DataFrame) -> DataFrame:
-    """Full PNG decode per payload → exact integer pixel sum plus a
-    row-position-weighted sum (catches unfilter errors that happen to
-    preserve totals). One Arrow-batched mapInPandas pass, no shuffle."""
-
-    def rows(r):
-        px = decode_png(r.payload).astype(np.int64)
-        h, w = px.shape[:2]
-        ch = 1 if px.ndim == 2 else px.shape[2]
-        wy = np.arange(h) + 1
-        rw = (px.reshape(h, -1).sum(axis=1) * wy).sum()
-        yield (r.media_id, w, h, ch, int(px.sum()), int(rw))
-
-    return _per_row_stage(
-        media, PNG_STATS_SCHEMA, rows, F.col("mime") == "image/png"
+    """Full PNG decode per payload → :func:`pixel_sum_row`. One
+    Arrow-batched mapInPandas pass, no shuffle."""
+    return per_row_stage(
+        media, PNG_STATS_SCHEMA,
+        lambda r: [pixel_sum_row(r.media_id, decode_png(r.payload))],
+        F.col("mime") == "image/png",
     )
 
 
@@ -2923,7 +2909,7 @@ def g711_decode_stats(media: DataFrame) -> DataFrame:
         yield (r.media_id, law, sr, len(s),
                int(np.abs(x).sum()), int(x[x > 0].sum()))
 
-    return _per_row_stage(
+    return per_row_stage(
         media, G711_STATS_SCHEMA, rows,
         F.col("mime").isin("audio/basic", "audio/x-alaw-basic"),
     )
@@ -3081,7 +3067,7 @@ def adpcm_decode_stats(media: DataFrame) -> DataFrame:
         yield (r.media_id, len(s), int(np.abs(x).sum()),
                int(x[x > 0].sum()), int(x[-1]))
 
-    return _per_row_stage(
+    return per_row_stage(
         media, ADPCM_STATS_SCHEMA, rows, F.col("mime") == "audio/x-adpcm"
     )
 
@@ -3575,7 +3561,7 @@ def gif_decode_stats(media: DataFrame) -> DataFrame:
         yield (r.media_id, w, h, len(frames),
                int(sums[0]), int(sums[1]), int(sums[2]), rw)
 
-    return _per_row_stage(
+    return per_row_stage(
         media, GIF_STATS_SCHEMA, rows, F.col("mime") == "image/gif"
     )
 
@@ -3756,7 +3742,7 @@ def qoi_decode_stats(media: DataFrame) -> DataFrame:
                int(px[:, :, 2].sum()),
                int((np.arange(h * w, dtype=np.int64) * flat_r).sum()))
 
-    return _per_row_stage(
+    return per_row_stage(
         media, QOI_STATS_SCHEMA, rows, F.col("mime") == "image/qoi"
     )
 
@@ -3834,7 +3820,7 @@ def media_ahash(media: DataFrame) -> DataFrame:
         hi = sum(bits[32 + j] << j for j in range(32))
         yield (r.media_id, hi, lo)
 
-    return _per_row_stage(
+    return per_row_stage(
         media, AHASH_SCHEMA, rows, F.col("mime") == "image/qoi"
     )
 
@@ -6156,7 +6142,7 @@ def transcode_audio(media: DataFrame, to: str = "audio/flac") -> DataFrame:
         new = enc(s, sr)
         yield (r.media_id, new, to, len(r.payload), len(new))
 
-    return _per_row_stage(
+    return per_row_stage(
         media, TRANSCODE_SCHEMA, rows, F.col("kind") == "audio"
     )
 
@@ -7489,7 +7475,7 @@ def webp_decode_stats(media: DataFrame) -> DataFrame:
             )
         yield (r.media_id, w, h, ch, len(frames), total, rw)
 
-    return _per_row_stage(
+    return per_row_stage(
         media, WEBP_STATS_SCHEMA, rows, F.col("mime") == "image/webp"
     )
 
@@ -7555,7 +7541,7 @@ def resample_audio(media: DataFrame, target_rate: int) -> DataFrame:
         )
         yield (r.media_id, new, "audio/wav", len(r.payload), len(new))
 
-    return _per_row_stage(
+    return per_row_stage(
         media, TRANSCODE_SCHEMA, rows, F.col("kind") == "audio"
     )
 
@@ -7639,7 +7625,7 @@ def augment_decode_stats(media: DataFrame, ops=AUGMENT_OPS) -> DataFrame:
         yield (r.media_id, op, ww, hh, int(out.sum()),
                int(rw), int(cw))
 
-    return _per_row_stage(
+    return per_row_stage(
         media, AUGMENT_STATS_SCHEMA, rows, F.col("kind") == "image"
     )
 
@@ -7817,7 +7803,7 @@ def avi_decode_stats(media: DataFrame) -> DataFrame:
         yield (r.media_id, x.shape[0], x.shape[2], x.shape[1], fms,
                int(per.sum()), int((per * wk).sum()))
 
-    return _per_row_stage(
+    return per_row_stage(
         media, AVI_STATS_SCHEMA, rows, F.col("mime") == "video/x-msvideo"
     )
 
@@ -9670,7 +9656,7 @@ def vp8_decode_stats(media: DataFrame) -> DataFrame:
                int(u.astype(np.int64).sum()), int(v.astype(np.int64).sum()),
                int((yl * wy[:, None] * wx[None, :]).sum()))
 
-    return _per_row_stage(
+    return per_row_stage(
         media, VP8_STATS_SCHEMA, rows, F.col("mime") == "image/webp"
     )
 
@@ -9747,7 +9733,7 @@ def wav_depth_stats(media: DataFrame) -> DataFrame:
                    int(np.abs(s64).sum()),
                    int(s64[:, 0].sum()), int(s64[:, 1].sum()))
 
-    return _per_row_stage(
+    return per_row_stage(
         media, WAV_DEPTH_STATS_SCHEMA, rows, F.col("mime") == "audio/wav"
     )
 
@@ -9994,7 +9980,7 @@ def webp_alpha_stats(media: DataFrame) -> DataFrame:
         yield (r.media_id, w, h, ch, int(rgb.sum()), int(a.sum()),
                int((a.sum(axis=1) * wy).sum()))
 
-    return _per_row_stage(
+    return per_row_stage(
         media, WEBP_ALPHA_STATS_SCHEMA, rows, F.col("mime") == "image/webp"
     )
 

@@ -20,10 +20,12 @@ window count.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from incremental_github_data_pipeline_spark.operators.core import per_row_stage
 from incremental_github_data_pipeline_spark.sources.local import local_rows_df
 
 
@@ -344,35 +346,22 @@ def parquet_layout(spark, paths: Sequence[str]) -> DataFrame:
             StructField("n_bytes_compressed", LongType(), False),
         ]
     )
-    pdf = local_rows_df(spark, [(p,) for p in paths], "path string")
 
-    def batches(it):
-        import os
-
-        import pandas as pd
+    def rows(r):
         import pyarrow.parquet as pq
 
-        for chunk in it:
-            rows: dict[str, list] = {
-                "file_name": [], "row_group": [], "n_rows": [],
-                "n_columns": [], "n_bytes_compressed": [],
-            }
-            for path in chunk["path"]:
-                md = pq.ParquetFile(path).metadata
-                for g in range(md.num_row_groups):
-                    rg = md.row_group(g)
-                    rows["file_name"].append(os.path.basename(path))
-                    rows["row_group"].append(g)
-                    rows["n_rows"].append(rg.num_rows)
-                    rows["n_columns"].append(rg.num_columns)
-                    rows["n_bytes_compressed"].append(
-                        sum(
-                            rg.column(i).total_compressed_size
-                            for i in range(rg.num_columns)
-                        )
-                    )
-            yield pd.DataFrame(rows)
+        md = pq.ParquetFile(r.path).metadata
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            yield (
+                os.path.basename(r.path), g, rg.num_rows, rg.num_columns,
+                sum(
+                    rg.column(i).total_compressed_size
+                    for i in range(rg.num_columns)
+                ),
+            )
 
-    return pdf.repartition(max(1, min(len(paths), 64))).mapInPandas(
-        batches, schema
+    paths_df = local_rows_df(spark, [(p,) for p in paths], "path string")
+    return per_row_stage(
+        paths_df.repartition(max(1, min(len(paths), 64))), schema, rows
     )

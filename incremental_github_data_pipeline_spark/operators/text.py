@@ -9,7 +9,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
+from incremental_github_data_pipeline_spark.operators.core import per_row_stage
 from incremental_github_data_pipeline_spark.sources.local import local_rows_df
 
 from incremental_github_data_pipeline_spark.functions.scalar import let_
@@ -1196,10 +1198,23 @@ def bm25_topk(
         postings = postings.crossJoin(F.broadcast(stats)).filter(
             F.col("df") <= F.col("_n") * F.lit(max_df_ratio)
         ).drop("_n", "_avgdl")
-    hits = (
-        qterms.join(postings, "term")
-        .join(dl, id_col)
-        .crossJoin(F.broadcast(stats))
+    return bm25_rank(
+        qterms.join(postings, "term").join(dl, id_col),
+        stats, qid_col, id_col, k, k1, b,
+    )
+
+
+def bm25_rank(
+    hits, stats, qid_col: str, id_col: str, k: int, k1: float, b: float
+):
+    """The BM25 scoring and top-k lane shared by :func:`bm25_topk` and
+    ``streaming.incremental.bm25_search_versioned``, so one-shot and
+    incremental indexing rank identically by construction. ``hits`` has
+    one row per (query, doc, term) with ``tf``, ``df`` and ``dl``;
+    ``stats`` is the 1-row ``(_n, _avgdl)`` corpus aggregate, broadcast
+    here. Returns (qid, rank, doc id, n_terms, sum_tf, score)."""
+    scored = (
+        hits.crossJoin(F.broadcast(stats))
         .withColumn(
             "_idf",
             F.log(
@@ -1221,11 +1236,12 @@ def bm25_topk(
                 )
             ),
         )
-    )
-    scored = hits.groupBy(qid_col, id_col).agg(
-        F.count(F.lit(1)).alias("n_terms"),
-        F.sum("tf").alias("sum_tf"),
-        F.sum("_s").alias("score"),
+        .groupBy(qid_col, id_col)
+        .agg(
+            F.count(F.lit(1)).alias("n_terms"),
+            F.sum("tf").alias("sum_tf"),
+            F.sum("_s").alias("score"),
+        )
     )
     w = Window.partitionBy(qid_col).orderBy(
         F.desc("score"), F.asc(id_col)
@@ -1305,15 +1321,6 @@ def gzip_ingest(
     payloads whole (all members), the quarantine mode for crawl shards
     where a torn record must not kill a 100 TB pass. Skipped ids can be
     recovered as ``df.join(decoded, id_col, "left_anti")``."""
-    if on_error not in ("raise", "skip"):
-        raise ValueError("on_error must be 'raise' or 'skip'")
-    from pyspark.sql.types import (
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     schema = StructType(
         [
             df.schema[id_col],
@@ -1322,30 +1329,14 @@ def gzip_ingest(
         ]
     )
 
-    def batches(it):
-        import pandas as pd
+    def rows(r):
+        pid, payload = r
+        for j, member in enumerate(gzip_members(payload)):
+            yield pid, j, member.decode("utf-8")
 
-        for pdf in it:
-            ids, idxs, texts = [], [], []
-            for r in pdf.itertuples(index=False):
-                try:
-                    members = [
-                        m.decode("utf-8")
-                        for m in gzip_members(getattr(r, payload_col))
-                    ]
-                except (ValueError, UnicodeDecodeError):
-                    if on_error == "raise":
-                        raise
-                    continue
-                for j, text in enumerate(members):
-                    ids.append(getattr(r, id_col))
-                    idxs.append(j)
-                    texts.append(text)
-            yield pd.DataFrame(
-                {id_col: ids, "member_idx": idxs, "text": texts}
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(batches, schema)
+    return per_row_stage(
+        df.select(id_col, payload_col), schema, rows, on_error=on_error
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2016,23 +2007,19 @@ def learn_unigram(
     )
     spark = df.sparkSession
 
-    def substr_batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            recs = []
-            for w, fq in zip(pdf["word"], pdf["freq"]):
-                n = len(w)
-                for i in range(n):
-                    for ln in range(1, min(max_piece_len, n - i) + 1):
-                        recs.append((w[i : i + ln], int(fq)))
-            yield pd.DataFrame(recs, columns=["piece", "cnt"])
+    def substrings(r):
+        w, fq = r.word, int(r.freq)
+        for i in range(len(w)):
+            for j in range(i + 1, min(i + max_piece_len, len(w)) + 1):
+                yield w[i:j], fq
 
     # r15: one materialization — the chars collect and the top-k seed
     # collect each re-ran the full substring mapInPandas + aggregate
     # without it (two corpus-derived passes for one table, guide §1.2).
     sub_counts = (
-        words.mapInPandas(substr_batches, "piece string, cnt long")
+        per_row_stage(
+            words, StructType.fromDDL("piece string, cnt long"), substrings
+        )
         .groupBy("piece")
         .agg(F.sum("cnt").alias("cnt"))
         .localCheckpoint(eager=True)
@@ -2148,44 +2135,35 @@ def learn_unigram(
         final.setdefault(c, counts.get(c, 1))
     logp = to_logp(final)
 
-    def viterbi_fn(logp_b):
-        def fn(it):
-            import pandas as pd
+    final_b = spark.sparkContext.broadcast(logp)
 
-            lp = logp_b.value
-            for pdf in it:
-                recs = []
-                for w, fq in zip(pdf["word"], pdf["freq"]):
-                    n = len(w)
-                    NEG = -(1 << 62)
-                    dp = [NEG] * (n + 1)
-                    bk = [0] * (n + 1)
-                    dp[0] = 0
-                    for j in range(1, n + 1):
-                        # i ascending = longest piece first; strict >
-                        # keeps it on ties (deterministic)
-                        for i in range(max(0, j - max_piece_len), j):
-                            p = lp.get(w[i:j])
-                            if p is None or dp[i] == NEG:
-                                continue
-                            if dp[i] + p > dp[j]:
-                                dp[j] = dp[i] + p
-                                bk[j] = i
-                    syms = []
-                    j = n
-                    while j > 0:
-                        syms.append(w[bk[j] : j])
-                        j = bk[j]
-                    recs.append((w, int(fq), syms[::-1]))
-                yield pd.DataFrame(
-                    recs, columns=["word", "freq", "syms"]
-                )
+    def viterbi(r):
+        w, lp, n = r.word, final_b.value, len(r.word)
+        NEG = -(1 << 62)
+        dp = [NEG] * (n + 1)
+        bk = [0] * (n + 1)
+        dp[0] = 0
+        for j in range(1, n + 1):
+            # i ascending = longest piece first; strict > keeps it on
+            # ties (deterministic)
+            for i in range(max(0, j - max_piece_len), j):
+                p = lp.get(w[i:j])
+                if p is None or dp[i] == NEG:
+                    continue
+                if dp[i] + p > dp[j]:
+                    dp[j] = dp[i] + p
+                    bk[j] = i
+        syms = []
+        j = n
+        while j > 0:
+            syms.append(w[bk[j] : j])
+            j = bk[j]
+        yield w, int(r.freq), syms[::-1]
 
-        return fn
-
-    b = spark.sparkContext.broadcast(logp)
-    vocab = words.mapInPandas(
-        viterbi_fn(b), "word string, freq long, syms array<string>"
+    vocab = per_row_stage(
+        words,
+        StructType.fromDDL("word string, freq long, syms array<string>"),
+        viterbi,
     )
     ranked = sorted(final.items(), key=lambda kv: (-kv[1], kv[0]))
     pieces = local_rows_df(
@@ -2616,45 +2594,21 @@ def cdc_chunk_rows(
         raise ValueError(
             f"need 1 <= min_len <= max_len, got ({min_len}, {max_len})"
         )
-    from collections.abc import Iterator as _It
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     schema = StructType(
         [
-            StructField(id_col, LongType(), False),
+            df.schema[id_col],
             StructField("chunk_idx", IntegerType(), False),
             StructField("chunk", StringType(), True),
         ]
     )
 
-    def batches(it: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, chunks = [], [], []
-            for r in pdf.itertuples(index=False):
-                t = getattr(r, text_col)
-                for j, ch in enumerate(
-                    cdc_split(
-                        t if t is not None else "",
-                        min_len=min_len,
-                        max_len=max_len,
-                    )
-                ):
-                    ids.append(getattr(r, id_col))
-                    idxs.append(j)
-                    chunks.append(ch)
-            yield pd.DataFrame(
-                {id_col: ids, "chunk_idx": idxs, "chunk": chunks}
-            )
+    def rows(r):
+        doc_id, text = r
+        chunks = cdc_split(text or "", min_len=min_len, max_len=max_len)
+        for j, chunk in enumerate(chunks):
+            yield doc_id, j, chunk
 
-    return df.select(id_col, text_col).mapInPandas(batches, schema)
+    return per_row_stage(df.select(id_col, text_col), schema, rows)
 
 
 # Unicode script ranges (BMP core blocks — the ranges that decide
@@ -3107,15 +3061,6 @@ def warc_ingest(
     contract; ``"skip"`` drops corrupt payloads whole — the crawl-
     shard quarantine mode, recoverable as a left_anti join on the id.
     """
-    if on_error not in ("raise", "skip"):
-        raise ValueError("on_error must be 'raise' or 'skip'")
-    from pyspark.sql.types import (
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     schema = StructType(
         [
             df.schema[id_col],
@@ -3129,43 +3074,18 @@ def warc_ingest(
         ]
     )
 
-    def batches(it):
-        import pandas as pd
-
-        cols = (
-            "record_idx warc_type target_uri warc_date http_status "
-            "content_type text"
-        ).split()
-        for pdf in it:
-            rows: dict[str, list] = {id_col: []}
-            for c in cols:
-                rows[c] = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    recs = warc_records(getattr(r, payload_col))
-                    texts = [
-                        rec["body"].decode("utf-8") for rec in recs
-                    ]
-                except (ValueError, UnicodeDecodeError):
-                    if on_error == "raise":
-                        raise
-                    continue
-                for j, rec in enumerate(recs):
-                    rows[id_col].append(getattr(r, id_col))
-                    rows["record_idx"].append(j)
-                    rows["warc_type"].append(rec["warc_type"])
-                    rows["target_uri"].append(rec["target_uri"])
-                    rows["warc_date"].append(rec["warc_date"])
-                    rows["http_status"].append(rec["http_status"])
-                    rows["content_type"].append(rec["content_type"])
-                    rows["text"].append(texts[j])
-            pdf_out = pd.DataFrame(rows)
-            pdf_out["http_status"] = pdf_out["http_status"].astype(
-                "Int32"
+    def rows(r):
+        pid, payload = r
+        for j, rec in enumerate(warc_records(payload)):
+            yield (
+                pid, j, rec["warc_type"], rec["target_uri"],
+                rec["warc_date"], rec["http_status"], rec["content_type"],
+                rec["body"].decode("utf-8"),
             )
-            yield pdf_out
 
-    return df.select(id_col, payload_col).mapInPandas(batches, schema)
+    return per_row_stage(
+        df.select(id_col, payload_col), schema, rows, on_error=on_error
+    )
 
 
 def warc_build(records: list[dict], gzip_per_record: bool = False) -> bytes:

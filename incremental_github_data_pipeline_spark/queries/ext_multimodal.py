@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from incremental_github_data_pipeline_spark.operators.core import per_row_stage
 from incremental_github_data_pipeline_spark.operators.multimodal import (
     extract_features,
     frame_sample_plan,
@@ -2591,40 +2592,17 @@ def q_media_avi_stats(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q_media_ico_stats(spark: SparkSession, sf: str) -> DataFrame:
     from incremental_github_data_pipeline_spark.operators.multimodal import (
+        PNG_STATS_SCHEMA,
         decode_ico,
         make_ico_media,
-    )
-    import numpy as np
-    import pandas as pd
-
-    from incremental_github_data_pipeline_spark.operators.multimodal import (
-        PNG_STATS_SCHEMA,
+        pixel_sum_row,
     )
 
-    def batches(it):
-        for pdf in it:
-            recs = []
-            for r in pdf.itertuples(index=False):
-                px = decode_ico(r.payload).astype(np.int64)
-                hh, ww = px.shape[:2]
-                wy = np.arange(hh) + 1
-                rw = (px.reshape(hh, -1).sum(axis=1) * wy).sum()
-                recs.append(
-                    (r.media_id, ww, hh, px.shape[2], int(px.sum()),
-                     int(rw))
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=["media_id", "width", "height", "channels",
-                         "pixel_sum", "row_weighted_sum"],
-            )
-
-    return (
-        make_ico_media(spark, n=24)
-        .filter(F.col("mime") == "image/x-icon")
-        .mapInPandas(batches, PNG_STATS_SCHEMA)
-        .orderBy("media_id")
-    )
+    return per_row_stage(
+        make_ico_media(spark, n=24), PNG_STATS_SCHEMA,
+        lambda r: [pixel_sum_row(r.media_id, decode_ico(r.payload))],
+        F.col("mime") == "image/x-icon",
+    ).orderBy("media_id")
 
 
 _AU_PCX_STATS_ORACLE = """

@@ -1,8 +1,10 @@
 """Archive-payload ingestion (tar / tar.gz / zip), stdlib-only — the
 shard-of-files layout datasets actually ship in (image tarballs à la
 WebDataset, zip bundles of documents, source-code archives). One
-member = one row, same per-file-isolation mapInPandas shape as the
-WARC/gzip/Avro readers.
+member = one row, through the same per-row shell as the WARC/gzip/Avro
+readers (:func:`~incremental_github_data_pipeline_spark.operators.core.per_row_stage`):
+a corrupt archive raises ``ValueError`` and ``on_error="skip"`` drops
+it whole.
 
 Reference scope note: the reference ingests REST JSON only
 (reference etl/extract.py); archive containers are [EXT] surface.
@@ -13,6 +15,16 @@ from __future__ import annotations
 import io
 import tarfile
 import zipfile
+
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from incremental_github_data_pipeline_spark.operators.core import per_row_stage
 
 
 def tar_members(payload: bytes) -> list[tuple[str, bytes]]:
@@ -121,16 +133,6 @@ def archive_ingest(
     mixed tarball of images + captions needs). One Arrow-batched
     mapInPandas pass; ``on_error="skip"`` drops corrupt payloads whole
     (recoverable via left_anti on the id)."""
-    if on_error not in ("raise", "skip"):
-        raise ValueError("on_error must be 'raise' or 'skip'")
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     schema = StructType(
         [
             df.schema[id_col],
@@ -141,30 +143,15 @@ def archive_ingest(
         ]
     )
 
-    def batches(it):
-        import pandas as pd
+    def rows(r):
+        pid, payload = r
+        for j, (name, data) in enumerate(archive_members(payload)):
+            try:
+                text = data.decode("utf-8")
+            except UnicodeDecodeError:
+                text = None
+            yield pid, j, name, len(data), text
 
-        for pdf in it:
-            rows: dict[str, list] = {
-                id_col: [], "member_idx": [], "name": [],
-                "n_bytes": [], "text": [],
-            }
-            for r in pdf.itertuples(index=False):
-                try:
-                    members = archive_members(getattr(r, payload_col))
-                except ValueError:
-                    if on_error == "raise":
-                        raise
-                    continue
-                for j, (name, data) in enumerate(members):
-                    rows[id_col].append(getattr(r, id_col))
-                    rows["member_idx"].append(j)
-                    rows["name"].append(name)
-                    rows["n_bytes"].append(len(data))
-                    try:
-                        rows["text"].append(data.decode("utf-8"))
-                    except UnicodeDecodeError:
-                        rows["text"].append(None)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(batches, schema)
+    return per_row_stage(
+        df.select(id_col, payload_col), schema, rows, on_error=on_error
+    )

@@ -23,6 +23,15 @@ import json
 import struct
 import zlib
 
+from pyspark.sql.types import (
+    IntegerType,
+    StructField,
+    StructType,
+    _parse_datatype_string,
+)
+
+from incremental_github_data_pipeline_spark.operators.core import per_row_stage
+
 _MAGIC = b"Obj\x01"
 
 
@@ -257,59 +266,35 @@ def avro_ingest(
     embedded writer schema must carry every declared field (checked by
     name, loud on mismatch), so schema drift surfaces as an error, not
     silent nulls. One Arrow-batched mapInPandas pass; ``on_error`` as
-    in :func:`~incremental_github_data_pipeline_spark.operators.text.gzip_ingest`."""
-    if on_error not in ("raise", "skip"):
-        raise ValueError("on_error must be 'raise' or 'skip'")
-    from pyspark.sql.types import (
-        IntegerType,
-        StructField,
-        StructType,
-        _parse_datatype_string,
-    )
-
+    in :func:`~incremental_github_data_pipeline_spark.operators.text.gzip_ingest`.
+    Every unreadable payload fails as ``ValueError``, in both modes."""
     declared = _parse_datatype_string(spark_schema)
     schema = StructType(
         [df.schema[id_col], StructField("record_idx", IntegerType(), False)]
         + list(declared.fields)
     )
-    names = [f.name for f in declared.fields]
+    names = declared.fieldNames()
 
-    def batches(it):
-        import pandas as pd
+    def rows(r):
+        pid, payload = r
+        try:
+            sch, recs = avro_records(payload)
+            have = {f["name"] for f in sch["fields"]}
+        except (KeyError, zlib.error, struct.error, IndexError,
+                NotImplementedError) as exc:
+            # struct.error / IndexError: in-block corruption that
+            # inflates the record count walks _decode_value off the
+            # buffer end. NotImplementedError: the codec guard fires for
+            # genuinely exotic files (snappy) and for corruption landing
+            # on the codec name alike. Either way the PAYLOAD is
+            # unreadable, the condition on_error="skip" drops.
+            raise ValueError(f"bad Avro payload: {exc!r}") from exc
+        missing = [n for n in names if n not in have]
+        if missing:
+            raise ValueError(f"Avro schema missing fields {missing}")
+        for j, rec in enumerate(recs):
+            yield (pid, j, *(rec[n] for n in names))
 
-        for pdf in it:
-            rows: dict[str, list] = {id_col: [], "record_idx": []}
-            for nm in names:
-                rows[nm] = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    sch, recs = avro_records(getattr(r, payload_col))
-                    have = {f["name"] for f in sch["fields"]}
-                    missing = [n for n in names if n not in have]
-                    if missing:
-                        raise ValueError(
-                            f"Avro schema missing fields {missing}"
-                        )
-                except (ValueError, KeyError, UnicodeDecodeError,
-                        zlib.error, struct.error, IndexError,
-                        NotImplementedError):
-                    # struct.error / IndexError: in-block corruption that
-                    # inflates the record count walks _decode_value off
-                    # the buffer end — a framing violation the skip mode
-                    # must quarantine, not crash on.
-                    # NotImplementedError: unsupported-codec guards fire
-                    # both for genuinely exotic files (snappy) and for
-                    # corruption landing on the codec name — either way
-                    # the PAYLOAD is unprocessable, the quarantinable
-                    # condition (the decode_stats precedent).
-                    if on_error == "raise":
-                        raise
-                    continue
-                for j, rec in enumerate(recs):
-                    rows[id_col].append(getattr(r, id_col))
-                    rows["record_idx"].append(j)
-                    for nm in names:
-                        rows[nm].append(rec[nm])
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(batches, schema)
+    return per_row_stage(
+        df.select(id_col, payload_col), schema, rows, on_error=on_error
+    )

@@ -1733,13 +1733,16 @@ def bm25_search_versioned(
     against the manifest's per-file term bounds before any parquet
     opens: a part survives only if some query term falls inside its
     [min, max], so a {'apple', 'zebra'} workload does not read the
-    alphabet between them), and the scoring expression is identical to
-    ``operators.text.bm25_topk`` — indexing the corpus in one shot or
-    in N increments yields the same ranking. ``version`` applies to
-    all four tables for a consistent time-traveled view ONLY when they
-    were committed in lockstep (one version per batch per table, as
-    the ingester does)."""
-    from incremental_github_data_pipeline_spark.operators.text import tokens
+    alphabet between them), and scoring and ranking run through
+    ``operators.text.bm25_rank``, the lane ``bm25_topk`` uses — indexing
+    the corpus in one shot or in N increments yields the same ranking.
+    ``version`` applies to all four tables for a consistent time-traveled
+    view ONLY when they were committed in lockstep (one version per batch
+    per table, as the ingester does)."""
+    from incremental_github_data_pipeline_spark.operators.text import (
+        bm25_rank,
+        tokens,
+    )
 
     qterms = queries.select(
         F.col(qid_col), F.explode(tokens(F.col(qtext_col))).alias("term")
@@ -1763,40 +1766,11 @@ def bm25_search_versioned(
         (F.sum("total_len") / F.sum("n_docs")).alias("_avgdl"),
     )
     dl = versioned.read_version(spark, f"{table_root}/doclens", version)
-    hits = (
+    return bm25_rank(
         qterms.join(postings, "term")
         .join(termstats, "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(doc_tot))
-        .withColumn(
-            "_idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("_n") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ),
-        )
-        .withColumn(
-            "_s",
-            F.col("_idf")
-            * (F.col("tf") * F.lit(k1 + 1.0))
-            / (
-                F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("_avgdl"))
-            ),
-        )
-    )
-    scored = hits.groupBy(qid_col, "doc_id").agg(
-        F.count(F.lit(1)).alias("n_terms"),
-        F.sum("tf").alias("sum_tf"),
-        F.sum("_s").alias("score"),
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, "rank", "doc_id", "n_terms", "sum_tf", "score")
+        .join(dl, "doc_id"),
+        doc_tot, qid_col, "doc_id", k, k1, b,
     )
 
 

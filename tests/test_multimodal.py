@@ -10,6 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from incremental_github_data_pipeline_spark.operators import multimodal as mm
+from incremental_github_data_pipeline_spark.operators import quality
+from incremental_github_data_pipeline_spark.operators import text as tx
+from incremental_github_data_pipeline_spark.sources import archives, avro
 from incremental_github_data_pipeline_spark.operators.multimodal import (
     extract_features,
     frame_sample_plan,
@@ -2901,10 +2904,39 @@ def test_vp8l_uniform_alphabet_header():
         assert np.array_equal(mm.decode_webp_lossless(p), px), kw
 
 
-# Every per-row decode stage: (stage, declared schema, an input it
-# accepts, an input whose rows it filters out — None for the two stages
-# that do not filter: decode_stats raises on an unknown mime and
-# resize_images passes non-BMP rows through).
+def _payloads(build):
+    """An ``accepted`` input of n ``(payload_id, payload)`` rows, the
+    i-th payload being ``build(i)``."""
+    return lambda spark, n: spark.createDataFrame(
+        [(i, build(i)) for i in range(n)], "payload_id long, payload binary"
+    )
+
+
+def _gz(i):
+    import gzip
+
+    return gzip.compress(f"doc {i}".encode(), mtime=0)
+
+
+def _avro(i):
+    schema = {"type": "record", "name": "r",
+              "fields": [{"name": "name", "type": "string"}]}
+    return avro.avro_build(schema, [{"name": f"r{i}"}])
+
+
+def _parquet_paths(spark, n):
+    import glob
+
+    from conftest import SF_DIR
+
+    return spark, sorted(glob.glob(f"{SF_DIR}/*.parquet"))[:n]
+
+
+# Every per-row stage: (stage, declared schema — a DDL string where it
+# follows the input's id column, an input it accepts, an input whose
+# rows it filters out — None for the stages that do not filter:
+# decode_stats raises on an unknown mime, resize_images passes non-BMP
+# rows through, and the payload readers and chunker take every row).
 _PER_ROW_STAGES = {
     "decode_stats": (
         mm.decode_stats, mm.MEDIA_STATS_SCHEMA, mm.make_real_media, None,
@@ -2986,6 +3018,44 @@ _PER_ROW_STAGES = {
         mm.webp_alpha_stats, mm.WEBP_ALPHA_STATS_SCHEMA,
         mm.make_webp_alpha_media, mm.make_adpcm_media,
     ),
+    "gzip_ingest": (
+        tx.gzip_ingest,
+        "payload_id long, member_idx int not null, text string not null",
+        _payloads(_gz), None,
+    ),
+    "warc_ingest": (
+        tx.warc_ingest,
+        "payload_id long, record_idx int not null, warc_type string not "
+        "null, target_uri string, warc_date string, http_status int, "
+        "content_type string, text string",
+        _payloads(lambda i: tx.warc_build(
+            [{"warc_type": "response", "http_status": 200, "body": b"x"}]
+        )), None,
+    ),
+    "archive_ingest": (
+        archives.archive_ingest,
+        "payload_id long, member_idx int not null, name string not null, "
+        "n_bytes long not null, text string",
+        _payloads(lambda i: archives.tar_build([(f"{i}.txt", b"x")])), None,
+    ),
+    "avro_ingest": (
+        lambda df: avro.avro_ingest(df, "name string"),
+        "payload_id long, record_idx int not null, name string",
+        _payloads(_avro), None,
+    ),
+    "cdc_chunk_rows": (
+        tx.cdc_chunk_rows,
+        "doc_id long, chunk_idx int not null, chunk string",
+        lambda spark, n: spark.createDataFrame(
+            [(i, "text " * 40) for i in range(n)], "doc_id long, text string"
+        ), None,
+    ),
+    "parquet_layout": (
+        lambda a: quality.parquet_layout(*a),
+        "file_name string not null, row_group int not null, n_rows long "
+        "not null, n_columns long not null, n_bytes_compressed long not null",
+        _parquet_paths, None,
+    ),
 }
 
 
@@ -3000,11 +3070,18 @@ def test_truncated_dht_raises_valueerror():
 def test_per_row_stage_contract(spark, name):
     """Each per-row stage declares its schema, runs as exactly one
     MapInPandas, and an input of another format yields 0 rows."""
+    from pyspark.sql.types import StructType
+
     stage, schema, accepted, rejected = _PER_ROW_STAGES[name]
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
     df = stage(accepted(spark, 3))
     assert df.schema == schema
     assert df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
+    # an adaptive plan (parquet_layout's repartition) prints its final
+    # and its initial plan: count the final one
+    plan = plan.split("== Initial Plan ==")[0]
     assert plan.count("MapInPandas") == 1, plan
     if rejected is not None:
         assert stage(rejected(spark, 3)).collect() == []
