@@ -3667,9 +3667,9 @@ def _cdc_dedup_oracle() -> str:
     "character volumes — the storage/compute saving content-defined "
     "chunking exists to expose (repeated boilerplate and shared "
     "passages collapse at chunk grain where doc-level hashing sees "
-    "distinct blobs). One Arrow chunking pass + one map-combined "
-    "aggregate on the chunk hash; the distinct-chars lane shuffles "
-    "chunk text once. Oracle: the identical generated polynomial/"
+    "distinct blobs). One Arrow chunking pass, one (source, chunk) "
+    "count aggregate, and one per-source fold of it for all four "
+    "measures. Oracle: the identical generated polynomial/"
     "mask SQL aggregated per source.",
 )
 def q_doc_cdc_dedup(spark: SparkSession, sf: str) -> DataFrame:
@@ -3677,20 +3677,23 @@ def q_doc_cdc_dedup(spark: SparkSession, sf: str) -> DataFrame:
     chunks = tx.cdc_chunk_rows(d).join(
         d.select("doc_id", "source"), "doc_id"
     )
-    per_source = chunks.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_chunks"),
-        F.countDistinct("chunk").cast("long").alias("n_distinct"),
-        F.sum(F.length("chunk")).cast("long").alias("chars_total"),
+    # one (source, chunk) -> count frame feeds every measure, so the
+    # corpus is read and chunked once; a NULL source is dropped, as
+    # the per-source join of the two-branch form did
+    counted = chunks.groupBy("source", "chunk").agg(
+        F.count(F.lit(1)).alias("_n")
     )
-    distinct_chars = (
-        chunks.select("source", "chunk")
-        .distinct()
+    return (
+        counted.filter(F.col("source").isNotNull())
         .groupBy("source")
         .agg(
-            F.sum(F.length("chunk")).cast("long").alias("chars_distinct")
+            F.sum("_n").cast("long").alias("n_chunks"),
+            F.count("chunk").cast("long").alias("n_distinct"),
+            F.sum(F.length("chunk") * F.col("_n")).cast("long").alias("chars_total"),
+            F.sum(F.length("chunk")).cast("long").alias("chars_distinct"),
         )
+        .orderBy("source")
     )
-    return per_source.join(distinct_chars, "source").orderBy("source")
 
 
 # FastCDC-style clamp parameters for q_doc_cdc_clamped: expected

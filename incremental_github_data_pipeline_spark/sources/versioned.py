@@ -162,40 +162,105 @@ def manifest_entries(
     return local_rows_df(spark, rows, "dir string, stats_json string")
 
 
-def _count_rows_from_footers(spark: SparkSession, data_dir: Path) -> int:
-    """Manifest ``n_rows`` for a freshly written local parquet dir,
-    read from the part-file FOOTERS driver-side (r16, guide §1.2): the
-    previous ``spark.read.parquet(...).count()`` scheduled one Spark
-    job per commit just to learn a number parquet already records
-    exactly (footer num_rows is the committed row count — the same
-    metadata count() itself would serve). Streaming ingests commit 2–4
-    tables per micro-batch, so this removes 2–4 jobs per batch across
-    every incremental lane. Falls back to the counting job for
-    non-local paths or any footer-read failure."""
-    try:
-        import pyarrow.parquet as pq
+# Path characters that ``input_file_name()`` leaves unescaped in its
+# ``file://`` URI: a part file whose path holds any other character
+# takes the Spark aggregate, whose keys are that URI.
+_URI_SAFE = frozenset(
+    "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789/_.-~"
+)
 
-        total = 0
-        seen = False
-        for f in Path(data_dir).rglob("*.parquet"):
-            total += pq.read_metadata(f).num_rows
-            seen = True
-        if seen or not any(Path(data_dir).iterdir()):
-            return total
+
+def _file_bounds(md, stats_cols: list[str]) -> dict | None:
+    """``[min, max]`` of each column over the row groups of one parquet
+    footer, or ``None`` when the footer cannot give them exactly: a
+    column missing from it, or a row group with values but without
+    min/max (parquet-mr omits binary statistics over 4 KiB). An
+    all-null column gives ``[None, None]``, as the Spark aggregate
+    does."""
+    cols = {md.schema.column(j).path: j for j in range(md.num_columns)}
+    out = {}
+    for c in stats_cols:
+        if c not in cols:
+            return None
+        lo = hi = None
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            st = rg.column(cols[c]).statistics
+            if st is not None and st.has_min_max:
+                lo = st.min if lo is None else min(lo, st.min)
+                hi = st.max if hi is None else max(hi, st.max)
+            elif st is None or st.null_count != rg.num_rows:
+                return None
+        out[c] = [lo, hi]
+    return out
+
+
+def _footer_stats(
+    df: DataFrame, data_dir: Path, stats_cols: list[str] | None
+) -> tuple[int, dict]:
+    """Manifest ``n_rows`` and per-file ``stats_cols`` bounds of the
+    local parquet dir ``df`` was just written to, from one
+    ``read_metadata`` per part file instead of Spark jobs (a count job
+    per commit, and the three-job aggregate of :func:`_file_stats` per
+    stats commit). Bounds are keyed by the ``file://`` URI that
+    ``input_file_name()`` gives; a file with no rows gets no entry.
+
+    The footers give bounds only where parquet's statistics order
+    equals Spark's ``min``/``max`` order: signed integers, and strings
+    under the default binary collation (both compare UTF-8 bytes
+    unsigned). Floats (NaN, -0.0), decimals, dates, timestamps, other
+    collations, footers without min/max (:func:`_file_bounds`) and
+    paths the URI would escape take :func:`_file_stats`; a dir whose
+    footers cannot be read (non-local) takes the counting job too."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import (
+        ByteType,
+        IntegerType,
+        LongType,
+        ShortType,
+        StringType,
+    )
+
+    spark = df.sparkSession
+    stats_cols = list(stats_cols or [])
+    types = {f.name: f.dataType for f in df.schema.fields}
+    ordered = stats_cols and all(
+        isinstance(types.get(c), (ByteType, ShortType, IntegerType, LongType))
+        or types.get(c) == StringType()
+        for c in stats_cols
+    )
+    n_rows, bounds = None, ({} if ordered else None)
+    try:
+        files = sorted(data_dir.rglob("*.parquet"))
+        if files or not any(data_dir.iterdir()):
+            n_rows = 0
+        for f in files:
+            md = pq.read_metadata(f)
+            n_rows += md.num_rows
+            if bounds is not None and md.num_rows:
+                path = os.path.abspath(f)
+                entry = _file_bounds(md, stats_cols) if set(path) <= _URI_SAFE else None
+                if entry is None:
+                    bounds = None
+                else:
+                    bounds["file://" + path] = entry
     except Exception:
-        pass
-    return spark.read.parquet(str(data_dir)).count()
+        n_rows = None
+    if n_rows is None:
+        n_rows, bounds = spark.read.parquet(str(data_dir)).count(), None
+    if stats_cols and bounds is None:
+        bounds = _file_stats(spark, data_dir, stats_cols)
+    return n_rows, bounds or {}
 
 
 def _file_stats(
     spark: SparkSession, data_dir: Path, stats_cols: list[str]
 ) -> dict:
-    """Per-file min/max for the given columns (one aggregate job over
-    the freshly written directory only). Values must be JSON-scalar
-    (numeric/string) — the same restriction Iceberg places on its
-    lower/upper bounds."""
+    """Per-file min/max for the given columns (one aggregate over the
+    freshly written directory only): the fallback and reference of
+    :func:`_footer_stats`. Values must be JSON-scalar (numeric/string)
+    — the same restriction Iceberg places on its lower/upper bounds."""
     from pyspark.sql import functions as F
-
 
     aggs = []
     for c in stats_cols:
@@ -239,7 +304,12 @@ def commit_version(
     the manifest (numeric/string only) — the Iceberg-style metadata
     that lets :func:`read_version` skip whole files against a range
     predicate without opening them. Appends merge prior stats, so
-    skipping works across the full file list.
+    skipping works across the full file list. The bounds of integer
+    and binary-collation string columns come from the footers just
+    written (row-group statistics, the same pass that reads
+    ``n_rows``); other types, row groups without min/max and non-local
+    paths take one Spark aggregate over the new files
+    (:func:`_footer_stats`).
 
     ``expected_version`` enables optimistic concurrency: pass the
     version you read before computing ``df`` and the commit refuses
@@ -250,21 +320,25 @@ def commit_version(
     empty table.
 
     ``txn_id`` makes the commit idempotent: if any retained manifest
-    already carries the token, the call is a no-op returning that
-    version — the contract an at-least-once caller (foreachBatch)
-    needs for replay safety. Retention must exceed the replay horizon
-    (module docstring).
+    up to the ``_latest`` version already carries the token, the call
+    is a no-op returning that version — the contract an at-least-once
+    caller (foreachBatch) needs for replay safety. Retention must
+    exceed the replay horizon (module docstring).
     """
     if mode not in ("overwrite", "append"):
         raise ValueError("mode must be 'overwrite' or 'append'")
     root = Path(root)
+    prev = latest_version(root)
     if txn_id is not None:
+        # Only committed versions count: a manifest past ``_latest`` is
+        # the orphan of a crash before the pointer write, and the next
+        # commit overwrites it, so honouring its token would lose the
+        # batch.
         for m in reversed(history(root)):
-            if m.get("txn") == txn_id:
+            if m["version"] <= (prev or 0) and m.get("txn") == txn_id:
                 return m["version"]
     (root / "data").mkdir(parents=True, exist_ok=True)
     _manifest_dir(root).mkdir(parents=True, exist_ok=True)
-    prev = latest_version(root)
     if expected_version is not None and (prev or 0) != expected_version:
         raise CommitConflict(
             f"expected version {expected_version}, table is at {prev}"
@@ -273,11 +347,7 @@ def commit_version(
 
     data_dir = root / "data" / f"{uuid.uuid4().hex}.parquet"
     df.write.mode("errorifexists").parquet(str(data_dir))
-    spark = df.sparkSession
-    n_rows = _count_rows_from_footers(spark, data_dir)
-    stats = (
-        _file_stats(spark, data_dir, stats_cols) if stats_cols else {}
-    )
+    n_rows, stats = _footer_stats(df, data_dir, stats_cols)
 
     prev_manifest = None
     prev_files: list[str] = []

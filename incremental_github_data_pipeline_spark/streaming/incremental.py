@@ -36,7 +36,7 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -1625,6 +1625,38 @@ def run_incremental_text_ingest(
     _run_available_now(stream, checkpoint, process)
 
 
+def _index_tf(batch_df: DataFrame) -> tuple[DataFrame, Observation]:
+    """The ``(term, doc_id, tf)`` postings of one index micro-batch, and
+    an :class:`Observation` of its docstats (``n_docs``, ``total_len``)
+    that the first action on the postings fills.
+
+    The batch is hash-partitioned on ``doc_id`` before the explode,
+    which satisfies the ``groupBy("term", "doc_id")`` distribution: the
+    one exchange moves the raw documents, and the tokenize and count
+    run on every shuffle partition instead of in one task per landed
+    shard. The observation sits below that exchange, so the docstats
+    cost no job of their own."""
+    from incremental_github_data_pipeline_spark.operators.text import (
+        token_count,
+        tokens,
+    )
+
+    docstats = Observation()
+    observed = batch_df.observe(
+        docstats,
+        F.count(F.lit(1)).alias("n_docs"),
+        F.coalesce(
+            F.sum(F.when(F.col("text").isNotNull(), token_count("text"))),
+            F.lit(0),
+        ).alias("total_len"),
+    )
+    toks = observed.repartition("doc_id").select(
+        "doc_id", F.explode(tokens(F.col("text"))).alias("term")
+    )
+    tf = toks.groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
+    return tf, docstats
+
+
 def run_incremental_index_ingest(
     spark: SparkSession,
     src_dir: str,
@@ -1650,27 +1682,25 @@ def run_incremental_index_ingest(
 
     Exactly-once via :func:`_run_versioned_ingest` (tags
     ``index-<table>``). Postings commits record per-file term min/max
-    bounds (``stats_cols``), so a query-term search can file-skip
-    before any parquet opens.
+    bounds (``stats_cols``, read from the parquet footers just
+    written), so a query-term search can file-skip before any parquet
+    opens.
+
+    A batch runs 9 Spark jobs: the empty-batch ``take(1)``, the
+    postings build of :func:`_index_tf` (one small shuffle of the raw
+    documents; its eager ``localCheckpoint`` also fills the docstats
+    observation) and the four commits.
 
     Serving: :func:`bm25_search_versioned` — same scoring lane as
     ``operators.text.bm25_topk``; ``version`` time-travels the search
     to an earlier index state."""
-    from incremental_github_data_pipeline_spark.operators.text import tokens
-
     stream = spark.readStream.schema("doc_id long, text string").parquet(
         src_dir
     )
 
     def fold(batch_df: DataFrame, batch_id: int, commit) -> None:
-        toks = batch_df.select(
-            "doc_id", F.explode(tokens(F.col("text"))).alias("term")
-        )
-        tf = (
-            toks.groupBy("term", "doc_id")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .localCheckpoint(eager=True)  # one tokenize per batch
-        )
+        tf, docstats = _index_tf(batch_df)
+        tf = tf.localCheckpoint(eager=True)  # one tokenize per batch
         commit(
             tf.select("term", "doc_id", "tf"),
             f"{table_root}/postings",
@@ -1694,15 +1724,11 @@ def run_incremental_index_ingest(
             f"{table_root}/doclens",
             "index-doclens",
         )
-        n_docs = batch_df.count()
-        total_len = (
-            tf.agg(F.coalesce(F.sum("tf"), F.lit(0)).alias("t"))
-            .collect()[0]["t"]
-        )
+        stats = docstats.get
         commit(
             local_rows_df(
                 spark,
-                [(int(batch_id), int(n_docs), int(total_len))],
+                [(int(batch_id), int(stats["n_docs"]), int(stats["total_len"]))],
                 "batch_id long, n_docs long, total_len long",
             ),
             f"{table_root}/docstats",

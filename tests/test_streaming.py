@@ -2998,7 +2998,7 @@ def _stream_jobs(spark, run):
 
 @pytest.mark.parametrize(
     "lane, jobs",
-    [("index", [16, 16]), ("hll", [3, 4]), ("curation", [12, 17])],
+    [("index", [9, 9]), ("hll", [3, 4]), ("curation", [12, 17])],
 )
 def test_ingest_jobs_per_micro_batch_are_pinned(spark, tmp_path, lane, jobs):
     """Jobs of the first and of a later micro-batch of 100 rows each,
@@ -3038,6 +3038,50 @@ def test_ingest_jobs_per_micro_batch_are_pinned(spark, tmp_path, lane, jobs):
         land(spark, src, b)
         got.append(_stream_jobs(spark, run))
     assert got == jobs
+
+
+def test_index_postings_shuffle_documents_once_below_the_tf_aggregate(spark):
+    """The index fold's postings plan has exactly one exchange, a hash
+    partitioning of the raw documents on doc_id, and the tf aggregate
+    runs above it with no second exchange; the docstats observation
+    sits below it."""
+    from incremental_github_data_pipeline_spark.streaming.incremental import _index_tf
+
+    docs = spark.createDataFrame(
+        [(i, _replay_text(i)) for i in range(20)], "doc_id long, text string"
+    )
+    tf, _ = _index_tf(docs)
+    plan = tf._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    exchange = plan.index("Exchange hashpartitioning(doc_id#")
+    assert plan.rindex("HashAggregate") < exchange < plan.index("CollectMetrics"), plan
+
+
+def test_index_docstats_come_from_the_batch(spark, tmp_path):
+    """docstats rows equal a count of the landed documents and the sum
+    of the committed postings' tf; a document with NULL text counts as
+    one document with no tokens."""
+    from incremental_github_data_pipeline_spark.sources import versioned
+    from incremental_github_data_pipeline_spark.streaming.incremental import (
+        run_incremental_index_ingest,
+    )
+
+    src, root, ckpt = tmp_path / "src", str(tmp_path / "t"), str(tmp_path / "ckpt")
+    batches = [
+        [(i, _replay_text(i)) for i in range(30)] + [(30, None), (31, "  ")],
+        [(i, _replay_text(i)) for i in range(100, 140)],
+    ]
+    land = _land_rows("doc_id long, text string", batches)
+    for b in (0, 1):
+        land(spark, src, b)
+        run_incremental_index_ingest(spark, str(src), root, ckpt)
+    postings = versioned.read_version(spark, f"{root}/postings")
+    tf_sum = {
+        lo: postings.filter(F.col("doc_id").between(lo, lo + 99)).agg(F.sum("tf")).first()[0]
+        for lo in (0, 100)
+    }
+    got = sorted(tuple(r) for r in versioned.read_version(spark, f"{root}/docstats").collect())
+    assert got == [(0, 32, tf_sum[0]), (1, 40, tf_sum[100])]
 
 
 def test_funnel_robots_gate_many_record_payloads_no_uid_collision(

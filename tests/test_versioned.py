@@ -75,22 +75,21 @@ def test_append_to_empty_and_bad_mode(spark, tmp_path):
         read_version(spark, tmp_path / "absent")
 
 
-def test_stats_skipping_prunes_files_and_stays_exact(spark, tmp_path):
+@pytest.mark.parametrize("dtype", ["long", "int", "double"])
+def test_stats_skipping_prunes_files_and_stays_exact(spark, tmp_path, dtype):
+    """Bounds from the footers (integers) and from the Spark aggregate
+    (double) prune alike."""
     from pyspark.sql import functions as F
+
+    def ids(lo):
+        ids = spark.range(lo, lo + 100).select(F.col("id").cast(dtype).alias("id"))
+        return ids.repartition(1)
 
     root = tmp_path / "t"
     # three appends with disjoint id ranges -> three prunable units
-    commit_version(
-        spark.range(0, 100).toDF("id").repartition(1), root, stats_cols=["id"]
-    )
-    commit_version(
-        spark.range(100, 200).toDF("id").repartition(1),
-        root, mode="append", stats_cols=["id"],
-    )
-    commit_version(
-        spark.range(200, 300).toDF("id").repartition(1),
-        root, mode="append", stats_cols=["id"],
-    )
+    commit_version(ids(0), root, stats_cols=["id"])
+    commit_version(ids(100), root, mode="append", stats_cols=["id"])
+    commit_version(ids(200), root, mode="append", stats_cols=["id"])
     pruned = read_version(spark, root, skip=("id", 120, 150))
     assert len(pruned.inputFiles()) == 1  # two of three commits skipped
     assert pruned.count() == 31
@@ -519,3 +518,108 @@ def test_restore_rolls_back_as_new_version(spark, tmp_path):
         restore_version(spark, root, version=v_bad - 1, txn_id="r1")
         == again
     )
+
+
+def test_txn_replay_after_crash_before_latest_keeps_the_batch(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between the manifest write and the ``_latest`` write
+    leaves an orphan manifest N carrying the batch's token. The replay
+    must commit the batch again (as version N), not return the orphan's
+    version: the next commit would overwrite manifest N and lose the
+    batch."""
+    import os
+    from pathlib import Path
+
+    root = tmp_path / "t"
+    batch = {
+        t: _df(spark, [(i, t) for i in range(lo, lo + 3)])
+        for t, lo in (("a", 0), ("b", 3), ("c", 6))
+    }
+    commit_version(batch["a"], root, mode="append", txn_id="a")
+    real = os.replace
+
+    def crash_at_pointer(src, dst):
+        if Path(dst).name == "_latest":
+            raise OSError("planted crash before the _latest write")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash_at_pointer)
+    with pytest.raises(OSError, match="planted"):
+        commit_version(batch["b"], root, mode="append", txn_id="b")
+    monkeypatch.undo()
+    assert latest_version(root) == 1
+    assert commit_version(batch["b"], root, mode="append", txn_id="b") == 2
+    assert commit_version(batch["b"], root, mode="append", txn_id="b") == 2
+    commit_version(batch["c"], root, mode="append", txn_id="c")
+    assert sorted(r["id"] for r in read_version(spark, root).collect()) == list(range(9))
+    assert [m["txn"] for m in history(root)] == ["a", "b", "c"]
+
+
+def _bounds_frame(spark, case):
+    """A two-file frame for one footer-bounds case: the stats column
+    ``c``, and the writer options."""
+    from pyspark.sql import functions as F
+
+    ids = spark.range(0, 4000).repartition(2)
+    cols = {
+        "long": F.col("id") * 7 - 5000,
+        "int": (F.col("id") % 1013 - 500).cast("int"),
+        "string_non_ascii": F.concat(
+            F.element_at(
+                F.array(*[F.lit(t) for t in ("é", "z", "日本", "\U0001f600", "a", "")]),
+                (F.col("id") % 6 + 1).cast("int"),
+            ),
+            F.col("id").cast("string"),
+        ),
+        "multi_row_group": F.col("id") * 3,
+        "all_null": F.lit(None).cast("long"),
+        "double": F.col("id") / 3 - 100,
+        "string_over_4k": F.concat(F.repeat(F.lit("x"), 5000), F.col("id").cast("string")),
+    }
+    opts = {"parquet.block.size": "4096"} if case == "multi_row_group" else {}
+    return ids.select(cols[case].alias("c"), "id"), opts
+
+
+@pytest.mark.parametrize(
+    "case, from_footers",
+    [
+        ("long", True),
+        ("int", True),
+        ("string_non_ascii", True),
+        ("multi_row_group", True),
+        ("all_null", True),
+        ("double", False),
+        ("string_over_4k", False),
+    ],
+)
+def test_footer_bounds_equal_the_spark_aggregate(spark, tmp_path, case, from_footers):
+    """Commit-time per-file bounds read from the parquet footers equal
+    the ``input_file_name`` aggregate they replace, key for key, and
+    cost no Spark job. A double column and a string whose footer holds
+    no min/max (over 4 KiB) take the aggregate instead."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    from incremental_github_data_pipeline_spark.sources import versioned
+
+    df, opts = _bounds_frame(spark, case)
+    data_dir = tmp_path / "d.parquet"
+    df.write.options(**opts).parquet(str(data_dir))
+    if case == "multi_row_group":
+        assert all(pq.read_metadata(f).num_row_groups > 1 for f in data_dir.glob("*.parquet"))
+    sc, group = spark.sparkContext, f"footers-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        n_rows, bounds = versioned._footer_stats(df, data_dir, ["c"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    want = versioned._file_stats(spark, data_dir, ["c"])
+    assert n_rows == 4000
+    assert len(want) == 2 and bounds == want
+    assert (jobs == 0) == from_footers, jobs
+    if case == "all_null":
+        assert all(b["c"] == [None, None] for b in bounds.values())
